@@ -11,6 +11,7 @@ Usage:
     python bench_extra.py --all                 # every registered query
     python bench_extra.py --plans --tag before  # capture explain output
     python bench_extra.py --sf /root/testdata/sf0.01 --cap 120
+    python bench_extra.py --worker-latency      # Python task start-up cost
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -68,6 +70,46 @@ def time_query(spark, fn, sf_dir: str, cap_s: float) -> dict:
     return out
 
 
+def worker_latency(spark, cores: int, reps: int = 7) -> dict:
+    """Fixed per-task cost of a Python stage: median wall of a warm
+    identity ``mapInPandas`` stage at ``cores`` and ``4*cores`` tasks
+    (one row per task, so the wall is task set-up, not rows), plus the
+    median in-worker ``importlib.invalidate_caches()`` time, the call
+    the package daemon makes cheap (see pubcrawler_spark/daemon.py)."""
+
+    def _identity(it):
+        yield from it
+
+    def _invalidate_ms(it):
+        import importlib
+
+        import pandas as pd
+
+        for pdf in it:
+            t0 = time.perf_counter()
+            importlib.invalidate_caches()
+            yield pd.DataFrame({"ms": [(time.perf_counter() - t0) * 1000] * len(pdf)})
+
+    out: dict = {
+        "cores": cores,
+        "daemon_module": spark.conf.get("spark.python.daemon.module", "pyspark.daemon"),
+    }
+    for n_tasks in (cores, 4 * cores):
+        df = spark.range(n_tasks, numPartitions=n_tasks).mapInPandas(_identity, "id long")
+        _noop(df)  # warm: daemon fork, worker imports
+        walls = []
+        for _ in range(reps):
+            t0 = time.monotonic()
+            _noop(df)
+            walls.append(time.monotonic() - t0)
+        out[f"identity_s_{n_tasks}_tasks"] = round(statistics.median(walls), 4)
+    inv = spark.range(cores, numPartitions=cores).mapInPandas(_invalidate_ms, "ms double")
+    inv.collect()
+    ms = [r.ms for _ in range(reps) for r in inv.collect()]
+    out["invalidate_caches_ms"] = round(statistics.median(ms), 3)
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", type=str, default="")
@@ -77,6 +119,7 @@ def main() -> None:
     ap.add_argument("--sf", type=str, default=SF_DIR)
     ap.add_argument("--cap", type=float, default=180.0)
     ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument("--worker-latency", action="store_true")
     args = ap.parse_args()
 
     from pubcrawler_spark.queries import QUERIES
@@ -94,6 +137,11 @@ def main() -> None:
     cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 16))
     spark = get_spark("bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+
+    if args.worker_latency:
+        print(json.dumps(worker_latency(spark, cpus)))
+        spark.stop()
+        return
 
     if args.plans:
         plan_dir = os.path.join(REPO, "plans", "r08")

@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from pubcrawler_spark.operators.seen import replace_broadcast
+
 BUCKET_SLOTS = 4
 _FP_MASK = np.uint64(0xFFFF)
 _MAX_KICKS = 500
@@ -70,6 +72,10 @@ class CuckooShard:
     """One shard's table: (n_buckets, 4) uint16."""
 
     def __init__(self, n_buckets: int, table: np.ndarray | None = None):
+        # i2 = i1 ^ fphash stays in range, and the in-batch dedup key
+        # (fp << 32 | bucket) is collision-free, only under this bound
+        if not (0 < n_buckets < 1 << 32 and n_buckets & (n_buckets - 1) == 0):
+            raise ValueError(f"n_buckets must be a power of two below 2^32, got {n_buckets}")
         self.n_buckets = n_buckets
         self.table = (
             table if table is not None else np.zeros((n_buckets, BUCKET_SLOTS), np.uint16)
@@ -190,6 +196,7 @@ class CuckooShards:
         self.n_shards = n_shards
         self.n_buckets = n_buckets
         self.shards: dict[int, CuckooShard] = shards or {}
+        self._probe_bc = None  # the one live probe broadcast
 
     @classmethod
     def sized(cls, capacity: int, n_shards: int = 32) -> "CuckooShards":
@@ -219,11 +226,14 @@ class CuckooShards:
 
     def filter_unseen(self, candidates: DataFrame) -> DataFrame:
         """mapInPandas probe against broadcast tables (same shape as
-        BloomShards.filter_unseen; shard-join composes identically)."""
-        spark = candidates.sparkSession
-        bc = spark.sparkContext.broadcast(
-            {sid: s.table.tobytes() for sid, s in self.shards.items()}
+        BloomShards.filter_unseen; shard-join composes identically).
+        As there, a call destroys the previous call's broadcast, so only
+        the latest probe DataFrame stays valid."""
+        bc = replace_broadcast(
+            candidates.sparkSession.sparkContext, self._probe_bc,
+            {sid: s.table.tobytes() for sid, s in self.shards.items()},
         )
+        self._probe_bc = bc
         n_shards, n_buckets = self.n_shards, self.n_buckets
         schema = candidates.schema
 

@@ -122,6 +122,7 @@ class BloomShards:
         self.n_hashes = n_hashes
         self.blobs: dict[int, np.ndarray] = blobs or {}
         self.n_items: dict[int, int] = {}
+        self._probe_bc = None  # the one live probe broadcast
 
     @classmethod
     def sized(cls, capacity: int, fpp: float = 0.01, n_shards: int = 32) -> "BloomShards":
@@ -164,11 +165,16 @@ class BloomShards:
             self.n_items[sid] = self.n_items.get(sid, 0) + int(r["n_items"])
 
     def filter_unseen(self, candidates: DataFrame) -> DataFrame:
-        """mapInPandas probe against broadcast blobs (no shuffle)."""
-        spark = candidates.sparkSession
-        bc = spark.sparkContext.broadcast(
-            {sid: b.tobytes() for sid, b in self.blobs.items()}
+        """mapInPandas probe against broadcast blobs (no shuffle).
+
+        Each call destroys the previous call's broadcast, so only the
+        DataFrame from the latest call stays valid: consume (write or
+        collect) a probe before probing again."""
+        bc = replace_broadcast(
+            candidates.sparkSession.sparkContext, self._probe_bc,
+            {sid: b.tobytes() for sid, b in self.blobs.items()},
         )
+        self._probe_bc = bc
         n_shards, n_bits, n_hashes = self.n_shards, self.n_bits, self.n_hashes
         schema = candidates.schema
 
@@ -225,6 +231,15 @@ class BloomShards:
             out.blobs[int(sid)] = np.frombuffer(blob, dtype=np.uint8).copy()
             out.n_items[int(sid)] = int(n)
         return out
+
+
+def replace_broadcast(sc, old, value):
+    """Broadcast ``value`` and destroy ``old``: a filter probed once per
+    crawl iteration keeps one broadcast alive (pickle file plus JVM
+    block), not one per iteration."""
+    if old is not None:
+        old.destroy()
+    return sc.broadcast(value)
 
 
 def build_bloom_shards(

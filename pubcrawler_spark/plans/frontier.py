@@ -46,6 +46,8 @@ Throughput engineering (north-star metric is URLs/sec):
   driver-side with pyarrow from the tables already on disk — no fourth
   Spark job; the distributed write remains past
   ``bloom_delta_driver_limit`` and always in ``bloom_impl="table"``.
+- State tables are read back with the schema recorded when this engine
+  wrote them, so a read-back runs no parquet schema-inference job.
 - ``skipped_seen`` needs an extra aggregation pass, so it is only
   computed when ``detailed_metrics=True`` (tests); bench runs lite.
 
@@ -62,6 +64,7 @@ import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from pubcrawler_spark.functions.urltools import with_canonical_url
 from pubcrawler_spark.operators import cuckoo as cuckoo_mod
@@ -247,6 +250,11 @@ class CrawlEngine:
         self.ckpt = checkpoint_dir
         self.seeds = seeds
         self._shards: seen_mod.BloomShards | None = None
+        # schema of each state table as this engine last wrote it: a
+        # read-back with a given schema skips parquet schema inference,
+        # a one-task Spark job per read. Empty for a checkpoint written
+        # by another engine, whose tables are still inferred.
+        self._schemas: dict[str, StructType | str] = {}
         self.robots_rules = sched.parse_robots_rules(robots).cache()
         # one-time detection on the tiny cached dim: does any host need
         # the RFC 9309 longest-match evaluator (Allow rules / wildcards)?
@@ -287,7 +295,13 @@ class CrawlEngine:
         return sorted(out)
 
     def _read(self, k: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._iter_dir(k), name))
+        return self._read_path(os.path.join(self._iter_dir(k), name), name)
+
+    def _read_path(self, path: str, name: str) -> DataFrame:
+        reader = self.spark.read
+        if name in self._schemas:
+            reader = reader.schema(self._schemas[name])
+        return reader.parquet(path)
 
     # -- iteration -----------------------------------------------------------
 
@@ -357,7 +371,7 @@ class CrawlEngine:
                 shard_dir = os.path.join(self._iter_dir(done[-1]), "seen_shards")
                 if self.bloom_impl == "table":
                     if os.path.isdir(shard_dir):
-                        self._bloom_table = self.spark.read.parquet(shard_dir)
+                        self._bloom_table = self._read(done[-1], "seen_shards")
                     else:  # legacy checkpoint: rebuild distributed from the ledger
                         self._bloom_table = seen_mod.build_bloom_delta_shards(
                             self._read_all("seen"), self.n_bloom_shards, *self._bloom_geom
@@ -425,10 +439,11 @@ class CrawlEngine:
             path = os.path.join(tmp, name)
             df.write.mode("overwrite").parquet(path)
             job_ms[name] = int((time.monotonic() - t0) * 1000)
+            self._schemas[name] = df.schema
             return path
 
         def _rb(name: str) -> DataFrame:
-            return self.spark.read.parquet(os.path.join(tmp, name))
+            return self._read_path(os.path.join(tmp, name), name)
 
         cand = sched.dedup_candidates(frontier)
         if self.seen_mode == "cuckoo":
@@ -646,6 +661,7 @@ class CrawlEngine:
                     _read_col(cand_path, "url_canon", "robots_ok", False),
                 ),
             )
+            self._schemas["seen"] = seen_mod.SEEN_SCHEMA
             job_ms["seen"] = int((time.monotonic() - t0) * 1000)
         else:
             delta_seen = (

@@ -67,6 +67,14 @@ def test_cuckoo_overfull_raises():
         s.insert(rng.integers(-(2**62), 2**62, size=500, dtype=np.int64))
 
 
+@pytest.mark.parametrize("n_buckets", [0, 12, 1 << 32])
+def test_cuckoo_rejects_bad_bucket_count(n_buckets):
+    # i2 derivation and the in-batch (fp, bucket) dedup key need a
+    # power-of-two bucket count below 2^32
+    with pytest.raises(ValueError, match="power of two"):
+        CuckooShard(n_buckets)
+
+
 def test_cuckoo_shards_roundtrip_and_probe(spark, tmp_path):
     from pubcrawler_spark.operators.seen import filter_unseen_exact
 

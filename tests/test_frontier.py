@@ -336,3 +336,52 @@ def test_loop_aqe_scoping_and_env_hook(spark, fixture, tmp_path, monkeypatch):
     engine.run(max_iterations=1)
     assert observed["aqe"] == "true"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+@pytest.fixture(scope="module")
+def stepped_bloom(spark, fixture, tmp_path_factory):
+    """A bloom-filter engine resumed one iteration at a time, with the
+    number of driver-side broadcast files after each iteration."""
+    import os
+
+    engine = CrawlEngine(
+        spark,
+        pages_spark_df(spark, fixture),
+        robots_spark_df(spark, fixture),
+        fixture.seeds,
+        checkpoint_dir=str(tmp_path_factory.mktemp("ck_step")),
+        year=YEAR,
+        host_budget=BUDGET,
+        seen_mode="bloom",
+        iteration_window_ms=WINDOW_MS,
+    )
+    bc_dir = spark.sparkContext._temp_dir
+    n_files = []
+    for k in range(1, MAX_ITER + 1):
+        engine.run(max_iterations=k, resume=k > 1)
+        n_files.append(len(os.listdir(bc_dir)))
+    return engine, n_files
+
+
+def test_probe_broadcast_does_not_accumulate(stepped_bloom):
+    """Each iteration's seen probe replaces the previous iteration's
+    broadcast instead of leaking its pickle file and JVM block."""
+    engine, n_files = stepped_bloom
+    assert engine.committed_iterations() == list(range(MAX_ITER))
+    # iteration 0 probes an empty filter; iterations 1..3 each broadcast
+    assert n_files[1] == n_files[2] == n_files[3], n_files
+
+
+def test_readback_schemas_match_inferred(spark, stepped_bloom, fixture, tmp_path):
+    """Read-backs carry the schema recorded at write time; it must equal
+    what parquet schema inference gives for every state table, both for
+    the Spark-written and the pyarrow-written seen delta."""
+    import os
+
+    exact = _run_engine(spark, fixture, tmp_path / "ck_schema")
+    for engine in (stepped_bloom[0], exact):
+        k = engine.committed_iterations()[-1]
+        assert {"candidates", "sched", "parsed_links", "frontier", "seen"} <= set(engine._schemas)
+        for name in engine._schemas:
+            inferred = spark.read.parquet(os.path.join(engine._iter_dir(k), name)).schema
+            assert engine._read(k, name).schema == inferred, name
