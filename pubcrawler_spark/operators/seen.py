@@ -236,9 +236,10 @@ class BloomShards:
 def replace_broadcast(sc, old, value):
     """Broadcast ``value`` and destroy ``old``: a filter probed once per
     crawl iteration keeps one broadcast alive (pickle file plus JVM
-    block), not one per iteration."""
+    block), not one per iteration. The destroy blocks until the blocks
+    are gone, so no removal runs on behind the next job."""
     if old is not None:
-        old.destroy()
+        old.destroy(blocking=True)
     return sc.broadcast(value)
 
 
