@@ -39,7 +39,6 @@ def cmd_crawl(args) -> int:
         spark, pages, robots, seeds,
         checkpoint_dir=args.checkpoint, year=args.year,
         host_budget=args.budget, seen_mode=args.seen_mode,
-        bloom_impl=args.bloom_impl,
     )
     totals = engine.run(max_iterations=args.iterations, resume=args.resume)
     print(json.dumps(totals))
@@ -161,8 +160,12 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--iterations", type=int, default=5)
     c.add_argument("--budget", type=int, default=10)
     c.add_argument("--year", default=2024)
-    c.add_argument("--seen-mode", choices=["exact", "bloom", "cuckoo"], default="bloom")
-    c.add_argument("--bloom-impl", choices=["driver", "table"], default="driver")
+    c.add_argument(
+        "--seen-mode", choices=["exact", "bloom", "cuckoo"], default="bloom",
+        help="URL-seen set: exact anti-join, bloom filter (held on the driver "
+        "while it is small, else as a checkpointed shard table), or cuckoo "
+        "filter (supports re-crawl deletes)",
+    )
     c.add_argument("--resume", action="store_true")
     c.set_defaults(fn=cmd_crawl)
 

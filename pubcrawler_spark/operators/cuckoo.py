@@ -6,8 +6,8 @@ The cuckoo filter is the seen-set variant that supports DELETION —
 the capability bloom cannot express: un-seeing a URL re-admits it to
 the frontier (forced re-crawl of stale pages) without rebuilding the
 filter. Same sharding layout as ``operators/seen.py``: shard by
-``pmod(url_hash, n_shards)``, one binary blob row per shard, probe via
-broadcast ``mapInPandas`` (shard-join composes exactly like bloom's).
+``pmod(url_hash, n_shards)``, one binary blob row per shard in the
+``seen_shards`` table, probe via broadcast ``mapInPandas``.
 
 Per-shard layout: ``n_buckets × 4`` uint16 slots. 16-bit fingerprints
 (0 reserved for empty); two candidate buckets ``i1 = h mod n_buckets``
@@ -16,9 +16,9 @@ trick, so eviction only needs the stored fingerprint. Load factor ≤
 ~0.95 at b=4; inserts are numpy-vectorized in rounds (bucket-place the
 easy majority, evict the rest item-at-a-time).
 
-No false negatives while every insert succeeds (enforced: overfull
-shards raise instead of silently dropping — size capacity like bloom's
-``expected_per_shard``). FPP ≈ 8/2^16 ≈ 1.2e-4 at b=4/f=16.
+No false negatives while every insert succeeds (enforced: an overfull
+shard raises and keeps the table it had before the insert). FPP ≈
+8/2^16 ≈ 1.2e-4 at b=4/f=16.
 
 DELETE semantics caveat: inserts are idempotent (an item whose
 fingerprint already probes present is not stored again — resume replay
@@ -38,10 +38,17 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from pubcrawler_spark.operators.seen import replace_broadcast
+from pubcrawler_spark.operators.seen import (
+    N_SHARDS,
+    SeenSet,
+    broadcast_probe,
+    iter_dir,
+    read_col,
+    read_shard_table,
+    write_shard_table,
+)
 
 BUCKET_SLOTS = 4
 _FP_MASK = np.uint64(0xFFFF)
@@ -129,6 +136,7 @@ class CuckooShard:
         )
         keep = np.unique(pair_key, return_index=True)[1]
         fp, i1, i2 = fp[keep], i1[keep], i2[keep]
+        before = self.table.copy()  # restored if the batch cannot fit
         pending = np.ones(len(fp), dtype=bool)
         # round-based vectorized placement: i1 first, then i2
         for target in (i1, i2):
@@ -152,9 +160,12 @@ class CuckooShard:
                 cur_fp, row[victim] = int(row[victim]), cur_fp
                 cur_i = (cur_i ^ int(_fp_hash(np.array([cur_fp], np.uint16))[0] % self.n_buckets)) % self.n_buckets
             else:
+                # the kicks dropped the fingerprint they carry, which may
+                # be an earlier key's: leave the shard as it was instead
+                self.table[:] = before
                 raise RuntimeError(
                     f"cuckoo shard overfull (capacity {self.n_buckets * BUCKET_SLOTS}); "
-                    "size the filter like bloom's expected_per_shard"
+                    "raise expected_urls"
                 )
 
     def contains(self, hashes: np.ndarray) -> np.ndarray:
@@ -188,9 +199,9 @@ class CuckooShard:
         return removed
 
 
-class CuckooShards:
-    """Sharded filter with the same surface as seen.BloomShards:
-    add_hashes / delete_hashes / filter_unseen / write / read."""
+class CuckooShards(SeenSet):
+    """Sharded cuckoo filter held in driver memory; the one
+    :class:`seen.SeenSet` that can :meth:`delete`."""
 
     def __init__(self, n_shards: int, n_buckets: int, shards: dict[int, CuckooShard] | None = None):
         self.n_shards = n_shards
@@ -199,7 +210,7 @@ class CuckooShards:
         self._probe_bc = None  # the one live probe broadcast
 
     @classmethod
-    def sized(cls, capacity: int, n_shards: int = 32) -> "CuckooShards":
+    def sized(cls, capacity: int, n_shards: int = N_SHARDS) -> "CuckooShards":
         per = CuckooShard.sized(max(1, capacity // n_shards))
         return cls(n_shards, per.n_buckets)
 
@@ -217,94 +228,70 @@ class CuckooShards:
         for sid, h in self._by_shard(hashes.astype(np.int64)):
             self._shard(sid).insert(h)
 
-    def delete_hashes(self, hashes: np.ndarray) -> int:
+    def delete(self, hashes: np.ndarray) -> int:
+        """Forget the given url_hashes; returns how many were present."""
         n = 0
-        for sid, h in self._by_shard(hashes.astype(np.int64)):
+        for sid, h in self._by_shard(np.asarray(hashes, dtype=np.int64)):
             if sid in self.shards:
                 n += int(self.shards[sid].delete(h).sum())
         return n
 
     def filter_unseen(self, candidates: DataFrame) -> DataFrame:
-        """mapInPandas probe against broadcast tables (same shape as
-        BloomShards.filter_unseen; shard-join composes identically).
-        As there, a call destroys the previous call's broadcast, so only
-        the latest probe DataFrame stays valid."""
-        bc = replace_broadcast(
-            candidates.sparkSession.sparkContext, self._probe_bc,
-            {sid: s.table.tobytes() for sid, s in self.shards.items()},
+        """mapInPandas probe against broadcast tables, as
+        BloomShards.filter_unseen."""
+        n_buckets = self.n_buckets
+        return broadcast_probe(
+            self, candidates, {sid: s.table.tobytes() for sid, s in self.shards.items()},
+            lambda b, h: CuckooShard(
+                n_buckets, np.frombuffer(b, np.uint16).reshape(-1, BUCKET_SLOTS)
+            ).contains(h),
         )
-        self._probe_bc = bc
-        n_shards, n_buckets = self.n_shards, self.n_buckets
-        schema = candidates.schema
 
-        def _probe(it):
-            tables = {
-                sid: CuckooShard(n_buckets, np.frombuffer(b, np.uint16).reshape(-1, BUCKET_SLOTS).copy())
-                for sid, b in bc.value.items()
-            }
-            for pdf in it:
-                if not len(pdf):
-                    yield pdf
-                    continue
-                h = pdf["url_hash"].to_numpy(dtype=np.int64)
-                shard = np.mod(h, n_shards)
-                keep = np.ones(len(pdf), dtype=bool)
-                for sid in np.unique(shard):
-                    s = tables.get(int(sid))
-                    if s is None:
-                        continue
-                    mask = shard == sid
-                    keep[mask] = ~s.contains(h[mask])
-                yield pdf[keep]
+    # -- SeenSet ---------------------------------------------------------------
 
-        return candidates.mapInPandas(_probe, schema=schema)
+    def probe(self, cand: DataFrame) -> DataFrame:
+        return self.filter_unseen(cand) if self.shards else cand
+
+    def add(self, delta_dir: str, n_delta: int) -> None:
+        self.add_hashes(read_col(delta_dir, "url_hash"))
+
+    def restore(self, ckpt: str, done: list[int]) -> None:
+        if done:
+            got = CuckooShards.read(os.path.join(iter_dir(ckpt, done[-1]), "seen_shards"))
+            self.n_shards, self.n_buckets, self.shards = got.n_shards, got.n_buckets, got.shards
+        else:
+            self.shards = {}
+
+    def stats(self) -> dict:
+        """Occupancy; est_fpp ≈ 2·b·load / (2^16 − 1) for the fullest
+        shard (Fan et al. §4)."""
+        slots = self.n_buckets * BUCKET_SLOTS
+        used = [int(np.count_nonzero(s.table)) for s in self.shards.values()]
+        return {
+            "items": sum(used),
+            "bytes": len(used) * slots * 2,
+            "est_fpp": 2 * BUCKET_SLOTS * max(used, default=0) / slots / 0xFFFF,
+        }
 
     # -- checkpoint (pyarrow; no Spark job) --------------------------------
 
     def write(self, path: str) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        os.makedirs(path, exist_ok=True)
         sids = sorted(self.shards)
-        tbl = pa.table(
+        write_shard_table(
+            path, "cuckoo",
             {
                 "shard_id": pa.array(sids, pa.int32()),
                 "table_bytes": pa.array([self.shards[s].table.tobytes() for s in sids], pa.binary()),
-                "n_buckets": pa.array([self.n_buckets] * len(sids), pa.int64()),
-                "n_shards": pa.array([self.n_shards] * len(sids), pa.int32()),
-            }
+            },
+            {"n_shards": self.n_shards, "n_buckets": self.n_buckets},
         )
-        # geometry also goes in file-level metadata so a ZERO-shard
-        # checkpoint (an iteration where nothing was marked seen — every
-        # fetch missed, nothing robots-disallowed) round-trips to an
-        # empty filter instead of crashing resume
-        tbl = tbl.replace_schema_metadata(
-            {"n_shards": str(self.n_shards), "n_buckets": str(self.n_buckets)}
-        )
-        pq.write_table(tbl, os.path.join(path, "part-00000-cuckoo.parquet"))
 
     @classmethod
     def read(cls, path: str) -> "CuckooShards":
-        import pyarrow.parquet as pq
-
-        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        t = pq.read_table(os.path.join(path, files[0]))
-        d = t.to_pydict()
-        if d["shard_id"]:
-            out = cls(int(d["n_shards"][0]), int(d["n_buckets"][0]))
-        else:
-            meta = {
-                (k.decode() if isinstance(k, bytes) else k):
-                (v.decode() if isinstance(v, bytes) else v)
-                for k, v in (t.schema.metadata or {}).items()
-            }
-            if "n_shards" not in meta or "n_buckets" not in meta:
-                raise ValueError(
-                    f"empty cuckoo shards at {path} with no geometry metadata "
-                    "(pre-r3 checkpoint?)"
-                )
-            out = cls(int(meta["n_shards"]), int(meta["n_buckets"]))
+        d, g = read_shard_table(path, ("n_shards", "n_buckets"))
+        out = cls(g["n_shards"], g["n_buckets"])
         for sid, blob in zip(d["shard_id"], d["table_bytes"]):
             out.shards[int(sid)] = CuckooShard(
                 out.n_buckets, np.frombuffer(blob, np.uint16).reshape(-1, BUCKET_SLOTS).copy()

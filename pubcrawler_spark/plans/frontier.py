@@ -6,12 +6,12 @@ Each iteration is a pure function of the previous checkpoint:
     frontier@K-1, seen@K-1, budgets
       → canonicalize+hash (Arrow UDF)         [urltools]
       → dedup per url_canon                   [schedule.dedup_candidates]
-      → anti-join seen set (exact or bloom)   [seen]
+      → probe the seen set                    [seen.SeenSet]
       → robots tag                            [schedule.tag_robots]
       → salted per-host top-k + global seq    [schedule.schedule_ranks]
       → join pages on url_canon (J5)          [simulated fetch]
       → parse UDF (V3) → parsed rows + out-links → frontier@K
-      → seen@K = seen@K-1 ∪ scheduled ∪ robots-disallowed
+      → seen delta@K = fetched ∪ robots-disallowed; seen set += delta
       → metrics@K (per-partition lineage)
       → atomic commit of checkpoints/iter=K/
 
@@ -27,7 +27,7 @@ Throughput engineering (north-star metric is URLs/sec):
 
 - ONE Spark job per state table per iteration — no standalone
   ``count()`` actions; row counts come free from the parquet footers of
-  the files just written (``_count_parquet``).
+  the files just written (``seen.count_parquet``).
 - Candidates are written first and read back, so every downstream
   consumer (schedule ranks, leftovers, seen update) reuses the
   materialized rows instead of re-running the canonicalize UDF and the
@@ -45,14 +45,17 @@ Throughput engineering (north-star metric is URLs/sec):
 - Small seen deltas (bounded by footer counts) are assembled
   driver-side with pyarrow from the tables already on disk — no fourth
   Spark job; the distributed write remains past
-  ``bloom_delta_driver_limit`` and always in ``bloom_impl="table"``.
+  ``seen.DRIVER_DELTA_ROWS``.
+- The seen set is one :class:`seen.SeenSet` whatever the ``seen_mode``;
+  every mode keeps the same per-iteration delta ledger ``iter=K/seen``.
 - State tables are read back with the schema recorded when this engine
   wrote them, so a read-back runs no parquet schema-inference job.
 - ``skipped_seen`` needs an extra aggregation pass, so it is only
   computed when ``detailed_metrics=True`` (tests); bench runs lite.
 
 At cluster scale the same layout maps 1:1 onto Iceberg table snapshots
-(append ``parsed``/``metrics``, overwrite ``frontier``/``seen``).
+(append ``parsed``/``metrics``/``seen``, overwrite ``frontier``/
+``seen_shards``).
 """
 
 from __future__ import annotations
@@ -67,27 +70,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from pubcrawler_spark.functions.urltools import with_canonical_url
-from pubcrawler_spark.operators import cuckoo as cuckoo_mod
 from pubcrawler_spark.operators import schedule as sched
 from pubcrawler_spark.operators import seen as seen_mod
 from pubcrawler_spark.operators.parse import parse_pages
+from pubcrawler_spark.operators.seen import count_parquet, parquet_files
 
-STATE_TABLES = ("candidates", "sched", "parsed_links", "frontier", "seen", "metrics")
-
-
-def _parquet_files(path: str) -> list[str]:
-    return [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.startswith("part-") and f.endswith(".parquet")
-    ]
-
-
-def _count_parquet(path: str) -> int:
-    """Row count from parquet footers — no Spark job."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+# written into every _manifest.json; resume refuses a checkpoint without
+# it (older engines rewrote the whole exact seen table per iteration and
+# kept no geometry in empty shard tables)
+FORMAT_VERSION = 2
 
 
 def _col_null_count(path: str, col: str, invert: bool = False) -> int:
@@ -95,7 +86,7 @@ def _col_null_count(path: str, col: str, invert: bool = False) -> int:
     import pyarrow.parquet as pq
 
     total = 0
-    for f in _parquet_files(path):
+    for f in parquet_files(path):
         md = pq.ParquetFile(f).metadata
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
@@ -106,32 +97,12 @@ def _col_null_count(path: str, col: str, invert: bool = False) -> int:
     return total
 
 
-def _read_col(path: str, col: str, mask_col: str | None = None, mask_value=None) -> np.ndarray:
-    """Read one column from a parquet dir driver-side (pyarrow; no Spark
-    job). Used for small per-iteration deltas — the distributed twin for
-    huge deltas is seen.build_bloom_shards + OR-merge."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    arrays = []
-    for f in _parquet_files(path):
-        cols = [col] + ([mask_col] if mask_col else [])
-        t = pq.read_table(f, columns=cols)
-        a = t.column(col)
-        if mask_col is not None:
-            a = pc.filter(a, pc.equal(t.column(mask_col), mask_value))
-        arrays.append(a.to_numpy(zero_copy_only=False))
-    if not arrays:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(arrays)
-
-
 def _col_sum_false(path: str, col: str) -> int:
     """Count of False in a boolean column (reads only that column)."""
     import pyarrow.parquet as pq
 
     total = 0
-    for f in _parquet_files(path):
+    for f in parquet_files(path):
         t = pq.read_table(f, columns=[col])
         # sum() of an EMPTY column is null — empty part files are normal
         # without AQE's runtime partition coalescing
@@ -195,9 +166,6 @@ class CrawlEngine:
         year: int | str,
         host_budget: int = 10,
         seen_mode: str = "exact",
-        n_bloom_shards: int = 32,
-        bloom_impl: str = "driver",
-        bloom_delta_driver_limit: int = 2_000_000,
         fetch_broadcast_limit: int = 4_000_000,
         seq_serial_limit: int = 2_000_000,
         salt_rows: int = 50_000,
@@ -211,45 +179,32 @@ class CrawlEngine:
         DELETION — :meth:`mark_unseen` re-admits URLs for re-crawl,
         which bloom cannot express; Fan et al. CoNEXT'14).
 
-        ``bloom_impl`` picks the seen-set machinery in bloom mode:
-
-        - ``"driver"`` — blobs live in driver memory (BloomShards),
-          probe broadcasts them; per-iteration deltas are pulled with
-          pyarrow while they stay under ``bloom_delta_driver_limit``
-          rows, else built distributed (build_bloom_delta_shards) and
-          OR-merged as blob rows. Right while blobs fit the driver.
-        - ``"table"`` — the 10^10-URL path: blobs live ONLY as a
-          checkpointed state table. Probe = shard-join cogroup, update
-          = distributed OR-merge (update_bloom_shards); the driver
-          never materializes a hash or a blob.
+        The filters are sized for ``expected_urls``. Bloom keeps its
+        shards in driver memory and broadcasts them to probe, unless
+        the sized filter passes ``seen.DRIVER_FILTER_BYTES``: then they
+        live only as the checkpointed ``seen_shards`` table, probed by a
+        shard join and updated by a distributed OR-merge
+        (``seen.BloomTable``). An iteration whose filter estimates an
+        FPP past ``seen.FPP_TARGET`` raises before its commit.
         """
         self.spark = spark
         self.year = year
         self.host_budget = host_budget
         self.seen_mode = seen_mode
-        self.n_bloom_shards = n_bloom_shards
-        self.bloom_impl = bloom_impl
-        self.bloom_delta_driver_limit = bloom_delta_driver_limit
         self.fetch_broadcast_limit = fetch_broadcast_limit
         self.seq_serial_limit = seq_serial_limit
-        self._bloom_geom = seen_mod._bloom_params(
-            max(1, expected_urls // n_bloom_shards), 0.01
-        )
-        self._bloom_table: DataFrame | None = None
-        self._cuckoo: "cuckoo_mod.CuckooShards | None" = None
-        # last committed iteration the in-memory driver-held filter
-        # (cuckoo/bloom shards) reflects; lets resume keep live state —
-        # including mark_unseen deletes — instead of re-reading shards
-        self._filter_state_k: int | None = None
-        self._probabilistic = seen_mode in ("bloom", "cuckoo")
-        self._seen_total = 0  # cumulative ledger size in bloom/cuckoo mode
+        self.seen = seen_mod.seen_set(spark, seen_mode, expected_urls)
+        # the committed iteration the in-memory seen set reflects; lets
+        # resume keep live state — including mark_unseen deletes —
+        # instead of restoring it from the checkpoint
+        self._seen_k: int | None = None
+        self._seen_total = 0  # cumulative delta-ledger size
         self.salt_rows = salt_rows
         self.detailed_metrics = detailed_metrics
         self.max_retries = max_retries
         self.expected_urls = expected_urls
         self.ckpt = checkpoint_dir
         self.seeds = seeds
-        self._shards: seen_mod.BloomShards | None = None
         # schema of each state table as this engine last wrote it: a
         # read-back with a given schema skips parquet schema inference,
         # a one-task Spark job per read. Empty for a checkpoint written
@@ -282,17 +237,20 @@ class CrawlEngine:
     # -- checkpoint plumbing -------------------------------------------------
 
     def _iter_dir(self, k: int) -> str:
-        return os.path.join(self.ckpt, f"iter={k}")
+        return seen_mod.iter_dir(self.ckpt, k)
 
     def committed_iterations(self) -> list[int]:
-        if not os.path.isdir(self.ckpt):
-            return []
-        out = []
-        for name in os.listdir(self.ckpt):
-            if name.startswith("iter=") and not name.endswith(".tmp"):
-                if os.path.exists(os.path.join(self.ckpt, name, "_manifest.json")):
-                    out.append(int(name.split("=")[1]))
-        return sorted(out)
+        return seen_mod.committed_iterations(self.ckpt)
+
+    def _check_format(self, done: list[int]) -> None:
+        for k in done:
+            with open(os.path.join(self._iter_dir(k), "_manifest.json")) as fh:
+                if json.load(fh).get("format_version") != FORMAT_VERSION:
+                    raise ValueError(
+                        f"{self._iter_dir(k)}: checkpoint lacks format_version "
+                        f"{FORMAT_VERSION} (written by an older engine); it cannot "
+                        "be resumed — start the crawl in a fresh checkpoint_dir"
+                    )
 
     def _read(self, k: int, name: str) -> DataFrame:
         return self._read_path(os.path.join(self._iter_dir(k), name), name)
@@ -336,98 +294,39 @@ class CrawlEngine:
     def _run_loop(self, max_iterations: int, resume: bool) -> dict:
         done = self.committed_iterations()
         if resume and done:
+            self._check_format(done)
             start = done[-1] + 1
             frontier = self._read(done[-1], "frontier")
-            seen = self._read(done[-1], "seen")
-            if self._probabilistic:
-                # bloom/cuckoo seen dirs are per-iteration deltas (append ledger)
-                self._seen_total = sum(
-                    _count_parquet(os.path.join(self._iter_dir(k), "seen")) for k in done
-                )
-            if self.seen_mode == "cuckoo":
-                shard_dir = os.path.join(self._iter_dir(done[-1]), "cuckoo_shards")
-                if self._cuckoo is not None and self._filter_state_k == done[-1]:
-                    # the in-memory filter already reflects this
-                    # checkpoint PLUS any mark_unseen deletes applied
-                    # since — re-reading the shards would silently undo
-                    # the re-crawl hook
-                    pass
-                elif os.path.isdir(shard_dir):
-                    self._cuckoo = cuckoo_mod.CuckooShards.read(shard_dir)
-                else:  # legacy checkpoint: rebuild from the seen ledger
-                    self._cuckoo = cuckoo_mod.CuckooShards.sized(
-                        self.expected_urls, n_shards=self.n_bloom_shards
-                    )
-                    self._cuckoo.add_hashes(
-                        np.concatenate(
-                            [
-                                _read_col(os.path.join(self._iter_dir(k), "seen"), "url_hash")
-                                for k in done
-                            ]
-                        ).astype(np.int64)
-                    )
-                self._filter_state_k = done[-1]
-            elif self.seen_mode == "bloom":
-                shard_dir = os.path.join(self._iter_dir(done[-1]), "seen_shards")
-                if self.bloom_impl == "table":
-                    if os.path.isdir(shard_dir):
-                        self._bloom_table = self._read(done[-1], "seen_shards")
-                    else:  # legacy checkpoint: rebuild distributed from the ledger
-                        self._bloom_table = seen_mod.build_bloom_delta_shards(
-                            self._read_all("seen"), self.n_bloom_shards, *self._bloom_geom
-                        )
-                elif self._shards is not None and self._filter_state_k == done[-1]:
-                    pass  # in-memory blobs already reflect this checkpoint
-                elif os.path.isdir(shard_dir):
-                    self._shards = seen_mod.BloomShards.read(shard_dir)
-                else:  # legacy checkpoint: rebuild from the seen ledger
-                    self._shards = seen_mod.BloomShards.sized(
-                        self.expected_urls, n_shards=self.n_bloom_shards
-                    )
-                    self._shards.add_hashes(
-                        np.concatenate(
-                            [
-                                _read_col(os.path.join(self._iter_dir(k), "seen"), "url_hash")
-                                for k in done
-                            ]
-                        ).astype(np.int64)
-                    )
-                if self.bloom_impl != "table":
-                    self._filter_state_k = done[-1]
+            self._seen_total = sum(
+                count_parquet(os.path.join(self._iter_dir(k), "seen")) for k in done
+            )
+            if self._seen_k != done[-1]:
+                self.seen.restore(self.ckpt, done)
+                self._seen_k = done[-1]
         else:
             if os.path.exists(self.ckpt):
                 shutil.rmtree(self.ckpt)
             os.makedirs(self.ckpt, exist_ok=True)
             start = 0
             frontier = self._initial_frontier()
-            seen = self.spark.createDataFrame([], seen_mod.SEEN_SCHEMA)
             self._seen_total = 0
-            self._filter_state_k = None
-            if self.seen_mode == "cuckoo":
-                self._cuckoo = cuckoo_mod.CuckooShards.sized(
-                    self.expected_urls, n_shards=self.n_bloom_shards
-                )
-            elif self.seen_mode == "bloom":
-                self._bloom_table = None  # empty until the first update
-                if self.bloom_impl != "table":
-                    self._shards = seen_mod.BloomShards.sized(
-                        self.expected_urls, n_shards=self.n_bloom_shards
-                    )
+            self.seen.restore(self.ckpt, [])
+            self._seen_k = None
 
         totals = {"scheduled": 0, "parsed": 0, "iterations": 0}
         for k in range(start, max_iterations):
             t0 = time.monotonic()
-            result = self._one_iteration(k, frontier, seen)
+            result = self._one_iteration(k, frontier)
             if result is None:
                 break
-            frontier, seen, counts = result
+            frontier, counts = result
             counts["wall_ms"] = int((time.monotonic() - t0) * 1000)
             totals["scheduled"] += counts["scheduled"]
             totals["parsed"] += counts["parsed"]
             totals["iterations"] += 1
         return totals
 
-    def _one_iteration(self, k: int, frontier: DataFrame, seen: DataFrame):
+    def _one_iteration(self, k: int, frontier: DataFrame):
         tmp = self._iter_dir(k) + ".tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
@@ -445,25 +344,7 @@ class CrawlEngine:
         def _rb(name: str) -> DataFrame:
             return self._read_path(os.path.join(tmp, name), name)
 
-        cand = sched.dedup_candidates(frontier)
-        if self.seen_mode == "cuckoo":
-            unseen = self._cuckoo.filter_unseen(cand) if self._cuckoo.shards else cand
-        elif self.seen_mode == "bloom":
-            # incremental shards: probe only (empty filter passes all)
-            if self.bloom_impl == "table":
-                unseen = (
-                    seen_mod.filter_unseen_bloom(
-                        cand, self._bloom_table, self.n_bloom_shards, mode="shard_join"
-                    )
-                    if self._bloom_table is not None
-                    else cand
-                )
-            else:
-                unseen = (
-                    self._shards.filter_unseen(cand) if self._shards.blobs else cand
-                )
-        else:
-            unseen = seen_mod.filter_unseen_exact(cand, seen)
+        unseen = self.seen.probe(sched.dedup_candidates(frontier))
 
         # JOB 1: deduped+unseen candidates tagged with robots_ok —
         # materialized ONCE; the schedule ranks, leftovers, robots
@@ -479,7 +360,7 @@ class CrawlEngine:
         )
         cand_rb = _rb("candidates")
         t0 = time.monotonic()
-        n_cand = _count_parquet(cand_path)
+        n_cand = count_parquet(cand_path)
         job_ms["cand_counters"] = int((time.monotonic() - t0) * 1000)
         allowed_rb = cand_rb.filter(F.col("robots_ok")).drop("robots_ok")
 
@@ -500,7 +381,7 @@ class CrawlEngine:
         )
         sched_path = _write(ranks, "sched")
         t0 = time.monotonic()
-        n_sched = _count_parquet(sched_path)
+        n_sched = count_parquet(sched_path)
         job_ms["sched_counter"] = int((time.monotonic() - t0) * 1000)
         if n_sched == 0:
             shutil.rmtree(tmp)
@@ -600,7 +481,7 @@ class CrawlEngine:
         )
         # the frontier write is a pure function of tables already on
         # disk, and everything between here and the commit (seen delta,
-        # footer counters, bloom shard update, metrics) reads those same
+        # footer counters, seen-set update, metrics) reads those same
         # committed-to-tmp files — not the frontier output. Submit the
         # write from a thread so the driver-side tail work back-fills
         # the Spark job's wall time instead of serializing after it
@@ -618,125 +499,81 @@ class CrawlEngine:
 
         frontier_th = InheritableThread(target=_write_frontier)
         frontier_th.start()
-
-        t0 = time.monotonic()
-        n_disallowed = _col_sum_false(cand_path, "robots_ok")
-        job_ms["cand_counters"] += int((time.monotonic() - t0) * 1000)
-
-        # JOB 4: seen update = successfully fetched ∪ robots-disallowed
-        # (fetch misses stay un-seen so retries pass the seen filter;
-        # bloom shards have no deletes, so this ordering is load-bearing).
-        # Bloom mode writes ONLY the delta — the seen table is an
-        # APPEND-ONLY ledger across iterations (Iceberg append), so the
-        # per-iteration cost is O(delta), not O(total): rewriting the
-        # full seen set every iteration is the rewrite-the-world
-        # anti-pattern at a 10^10-URL frontier. Exact mode keeps the
-        # full rewrite (its anti-join probe needs one consolidated
-        # table and it exists for fixture-scale determinism anyway).
-        # Delta-size gate for the WRITE itself: when this iteration's
-        # delta is bounded (n_sched + n_disallowed from footers — both
-        # known without an action), the delta is assembled driver-side
-        # with pyarrow from the two parquet tables just written (one
-        # masked column read each, numpy dedup, one file write) — no
-        # Spark job at all. Past the limit, the distributed plan runs.
-        # This is the same driver-vs-distributed gating the bloom update
-        # below already uses, applied one step earlier. Never in
-        # bloom_impl="table" — that mode's contract is that the driver
-        # materializes NO hashes, ever (tested by poisoning _read_col).
-        delta_bound = n_sched + n_disallowed
-        driver_delta_ok = self._probabilistic and not (
-            self.seen_mode == "bloom" and self.bloom_impl == "table"
-        )
-        if driver_delta_ok and delta_bound <= self.bloom_delta_driver_limit:
-            seen_path = os.path.join(tmp, "seen")
+        try:  # joined on every exit: resume rmtree()s this tmp dir
             t0 = time.monotonic()
-            _write_seen_delta_pyarrow(
-                seen_path,
-                fetched=(
-                    _read_col(pl_path, "url_hash", "fetched", True),
-                    _read_col(pl_path, "url_canon", "fetched", True),
-                ),
-                disallowed=(
-                    _read_col(cand_path, "url_hash", "robots_ok", False),
-                    _read_col(cand_path, "url_canon", "robots_ok", False),
-                ),
-            )
-            self._schemas["seen"] = seen_mod.SEEN_SCHEMA
-            job_ms["seen"] = int((time.monotonic() - t0) * 1000)
-        else:
-            delta_seen = (
-                pl_rb.filter(F.col("fetched")).select("url_hash", "url_canon")
-                .unionByName(cand_rb.filter(~F.col("robots_ok")).select("url_hash", "url_canon"))
-                .dropDuplicates(["url_hash"])
-            )
-            if self._probabilistic:
-                seen_path = _write(delta_seen, "seen")
-            else:
-                seen_path = _write(
-                    delta_seen.unionByName(seen).dropDuplicates(["url_hash"]), "seen"
-                )
-        t0 = time.monotonic()
-        n_fetch_miss = _col_sum_false(pl_path, "fetched")
-        job_ms["miss_counter"] = int((time.monotonic() - t0) * 1000)
-        # The in-memory seen filter is about to be mutated (cuckoo/bloom
-        # add_hashes) BEFORE the commit rename below; mark it dirty
-        # immediately before the first mutation — not at iteration
-        # start — so a failure during the fetch/parse phase (filter
-        # untouched) keeps the filter valid and preserves any
-        # mark_unseen re-crawl intent, while a failure between here and
-        # the commit still forces resume() to re-read the committed
-        # shards instead of keeping a filter contaminated with this
-        # iteration's (never-committed) url_hashes — in bloom mode those
-        # URLs would otherwise be silently un-crawlable forever (bloom
-        # cannot delete). Restored to k only after the atomic commit.
-        self._filter_state_k = None
-        if self.seen_mode == "cuckoo":
-            # cuckoo shards: driver-held tables, delete-capable (the
-            # re-crawl path bloom cannot express); delta from the ledger
-            self._cuckoo.add_hashes(_read_col(seen_path, "url_hash").astype(np.int64))
-            self._cuckoo.write(os.path.join(tmp, "cuckoo_shards"))
-        elif self.seen_mode == "bloom":
-            # the just-written seen table IS this iteration's delta
-            # (append-only ledger), so every update path reads it
-            # directly — no second pass over parsed/candidates
-            n_delta = _count_parquet(seen_path)
-            if self.bloom_impl == "table":
-                # distributed OR-merge: delta hashes cogroup with the
-                # existing blob rows; driver touches neither
-                base = self._bloom_table
-                if base is None:
-                    base = self.spark.createDataFrame([], seen_mod.BLOOM_SCHEMA)
-                _write(
-                    seen_mod.update_bloom_shards(
-                        _rb("seen").select("url_hash"), base,
-                        self.n_bloom_shards, *self._bloom_geom,
-                    ),
-                    "seen_shards",
-                )
-            elif n_delta > self.bloom_delta_driver_limit:
-                # big delta: build fixed-geometry delta blobs distributed
-                # and OR-merge the (bounded-size) blob rows — the driver
-                # never pulls raw hashes
-                self._shards.add_blob_rows(
-                    seen_mod.build_bloom_delta_shards(
-                        _rb("seen"), self.n_bloom_shards,
-                        self._shards.n_bits, self._shards.n_hashes,
-                    ).collect()
-                )
-                self._shards.write(os.path.join(tmp, "seen_shards"))
-            else:
-                # small delta: pyarrow column read + numpy OR (no job)
-                self._shards.add_hashes(
-                    _read_col(seen_path, "url_hash").astype(np.int64)
-                )
-                self._shards.write(os.path.join(tmp, "seen_shards"))
+            n_disallowed = _col_sum_false(cand_path, "robots_ok")
+            job_ms["cand_counters"] += int((time.monotonic() - t0) * 1000)
 
-        frontier_th.join()
+            # JOB 4: seen delta = successfully fetched ∪ robots-disallowed
+            # (fetch misses stay un-seen so retries pass the seen filter;
+            # bloom shards have no deletes, so this ordering is
+            # load-bearing). Only the delta is written — the seen table is
+            # an APPEND-ONLY ledger across iterations (Iceberg append), so
+            # the per-iteration cost is O(delta), not O(total): rewriting
+            # the full seen set every iteration is the rewrite-the-world
+            # anti-pattern at a 10^10-URL frontier. Delta-size gate: when
+            # this iteration's delta is bounded (n_sched + n_disallowed
+            # from footers — both known without an action), the delta is
+            # assembled driver-side with pyarrow from the two parquet
+            # tables just written (one masked column read each, numpy
+            # dedup, one file write) — no Spark job at all. Past the
+            # limit, the distributed plan runs.
+            seen_path = os.path.join(tmp, "seen")
+            if n_sched + n_disallowed <= seen_mod.DRIVER_DELTA_ROWS:
+                t0 = time.monotonic()
+                _write_seen_delta_pyarrow(
+                    seen_path,
+                    fetched=(
+                        seen_mod.read_col(pl_path, "url_hash", "fetched", True),
+                        seen_mod.read_col(pl_path, "url_canon", "fetched", True),
+                    ),
+                    disallowed=(
+                        seen_mod.read_col(cand_path, "url_hash", "robots_ok", False),
+                        seen_mod.read_col(cand_path, "url_canon", "robots_ok", False),
+                    ),
+                )
+                self._schemas["seen"] = seen_mod.SEEN_SCHEMA
+                job_ms["seen"] = int((time.monotonic() - t0) * 1000)
+            else:
+                _write(
+                    pl_rb.filter(F.col("fetched")).select("url_hash", "url_canon")
+                    .unionByName(cand_rb.filter(~F.col("robots_ok")).select("url_hash", "url_canon"))
+                    .dropDuplicates(["url_hash"]),
+                    "seen",
+                )
+            t0 = time.monotonic()
+            n_fetch_miss = _col_sum_false(pl_path, "fetched")
+            job_ms["miss_counter"] = int((time.monotonic() - t0) * 1000)
+            # The in-memory seen set is about to take in this iteration's
+            # delta BEFORE the commit rename below; mark it dirty
+            # immediately before that — not at iteration start — so a
+            # failure during the fetch/parse phase (set untouched) keeps
+            # it valid and preserves any mark_unseen re-crawl intent,
+            # while a failure between here and the commit still forces
+            # resume() to restore the committed state instead of keeping
+            # a filter contaminated with this iteration's (never-committed)
+            # url_hashes — in bloom mode those URLs would otherwise be
+            # silently un-crawlable forever (bloom cannot delete).
+            self._seen_k = None
+            n_delta = count_parquet(seen_path)
+            self.seen.add(seen_path, n_delta)
+            self.seen.write(os.path.join(tmp, "seen_shards"))
+            seen_stats = self.seen.stats()
+            if seen_stats["est_fpp"] > seen_mod.FPP_TARGET:
+                raise RuntimeError(
+                    f"seen set over capacity at iteration {k}: estimated FPP "
+                    f"{seen_stats['est_fpp']:.3g} > {seen_mod.FPP_TARGET} with "
+                    f"{seen_stats['items']} URLs; start over with a larger "
+                    f"expected_urls (now {self.expected_urls})"
+                )
+        finally:
+            frontier_th.join()
         if "exc" in frontier_box:
             raise frontier_box["exc"]
         frontier_path = frontier_box["path"]
 
         t_commit = time.monotonic()
+        self._seen_total += n_delta
         counts = {
             "iteration": k,
             "input_rows": n_cand,
@@ -744,13 +581,10 @@ class CrawlEngine:
             "parsed": n_parsed,
             "skipped_robots": n_disallowed,
             "fetch_misses": n_fetch_miss,
-            "frontier_next": _count_parquet(frontier_path),
+            "frontier_next": count_parquet(frontier_path),
+            "seen_total": self._seen_total,
+            "seen_set": seen_stats,
         }
-        if self._probabilistic:
-            self._seen_total += _count_parquet(seen_path)
-            counts["seen_total"] = self._seen_total
-        else:
-            counts["seen_total"] = _count_parquet(seen_path)
 
         # metrics: lite mode writes the counters with pyarrow (no Spark
         # job); detailed mode adds per-partition lineage (JOB 5)
@@ -773,6 +607,7 @@ class CrawlEngine:
         job_ms["commit_tail"] = int((time.monotonic() - t_commit) * 1000)
         counts["job_ms"] = job_ms
         manifest = {
+            "format_version": FORMAT_VERSION,
             "iteration": k,
             "counts": counts,
             "lineage": {
@@ -789,23 +624,20 @@ class CrawlEngine:
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)  # atomic commit
-        self._filter_state_k = k  # in-memory filter now matches iter=k
+        self._seen_k = k  # the in-memory seen set now matches iter=k
 
         # read back committed state (cuts lineage like Iceberg snapshot reads)
-        if self.seen_mode == "bloom" and self.bloom_impl == "table":
-            self._bloom_table = self._read(k, "seen_shards")
-        return self._read(k, "frontier"), self._read(k, "seen"), counts
+        return self._read(k, "frontier"), counts
 
     def mark_unseen(self, url_hashes) -> int:
         """Cuckoo-only re-crawl hook: delete the given url_hashes from
         the seen filter so a future discovery re-schedules them (stale-
-        page refresh). Returns how many were actually removed. The next
-        committed iteration checkpoints the updated shards."""
-        if self.seen_mode != "cuckoo" or self._cuckoo is None:
-            raise ValueError("mark_unseen requires seen_mode='cuckoo'")
+        page refresh). Returns how many were actually removed; any other
+        seen_mode raises ValueError. The next committed iteration
+        checkpoints the updated shards."""
         # note: the seen LEDGER keeps the URL (it is crawl history);
         # only the filter — which governs scheduling — forgets it
-        return self._cuckoo.delete_hashes(np.asarray(url_hashes, dtype=np.int64))
+        return self.seen.delete(np.asarray(url_hashes, dtype=np.int64))
 
     # -- readers over the full run --------------------------------------------
     # `parsed_links` carries the schedule columns (written once per
@@ -831,11 +663,8 @@ class CrawlEngine:
         return self._read_all("metrics")
 
     def final_seen(self) -> DataFrame:
-        if self._probabilistic:
-            # the seen table is an append-only delta ledger in bloom/cuckoo mode
-            return self._read_all("seen").dropDuplicates(["url_hash"])
-        k = self.committed_iterations()[-1]
-        return self._read(k, "seen")
+        # the seen table is an append-only delta ledger in every mode
+        return self._read_all("seen").dropDuplicates(["url_hash"])
 
 
 def _frontier_cols():

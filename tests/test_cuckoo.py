@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pubcrawler_spark.operators.cuckoo import CuckooShard, CuckooShards
+from pubcrawler_spark.operators.seen import BloomShards, bloom_probe_bytes
 
 
 @given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), min_size=1, max_size=400))
@@ -63,8 +64,16 @@ def test_cuckoo_delete_readmits():
 def test_cuckoo_overfull_raises():
     rng = np.random.default_rng(13)
     s = CuckooShard(8)  # 32 slots
+    earlier = rng.integers(-(2**62), 2**62, size=16, dtype=np.int64)
+    s.insert(earlier[:8])
+    s.insert(earlier[8:])
+    before = s.table.copy()
     with pytest.raises(RuntimeError):
         s.insert(rng.integers(-(2**62), 2**62, size=500, dtype=np.int64))
+    # the failed batch leaves the shard as it was: no earlier key is
+    # lost to the fingerprint the kicks were carrying when they gave up
+    assert s.contains(earlier).all()
+    assert (s.table == before).all()
 
 
 @pytest.mark.parametrize("n_buckets", [0, 12, 1 << 32])
@@ -97,37 +106,29 @@ def test_cuckoo_shards_roundtrip_and_probe(spark, tmp_path):
     assert got2 == got
 
 
-def test_engine_cuckoo_matches_mirror(spark, tmp_path):
-    from pubcrawler_spark import refmirror as rm
-    from pubcrawler_spark.fixtures import YEAR, generate_pages, is_index_url, pages_spark_df, robots_spark_df
+def test_engine_cuckoo_mark_unseen(spark, tmp_path):
+    """Re-crawl hook: mark_unseen makes the filter pass a fetched URL
+    again; any other seen_mode refuses it. Mirror parity of the cuckoo
+    engine is test_frontier.py::test_engine_matches_mirror_seen."""
+    from pubcrawler_spark.fixtures import YEAR, generate_pages, pages_spark_df, robots_spark_df
     from pubcrawler_spark.plans.frontier import CrawlEngine
 
     fx = generate_pages(200)
-    mirror = rm.mirror_crawl(
-        {r["url"]: r["html"] for r in fx.rows}, fx.seeds, fx.robots,
-        host_budget=6, max_iterations=3, year=YEAR,
-        index_url_pred=is_index_url, iteration_window_ms=10_000,
-    )
     eng = CrawlEngine(
         spark, pages_spark_df(spark, fx), robots_spark_df(spark, fx), fx.seeds,
         checkpoint_dir=str(tmp_path / "ckc"), year=YEAR, host_budget=6,
         seen_mode="cuckoo", iteration_window_ms=10_000,
     )
     eng.run(max_iterations=3)
-    got = [(r.iteration, r.seq, r.url_canon)
-           for r in eng.full_schedule().orderBy("iteration", "seq").collect()]
-    want = [(s["iteration"], s["seq"], s["url_canon"]) for s in mirror["schedule"]]
-    assert got == want
-    assert {r.url_canon for r in eng.final_seen().collect()} == mirror["seen"]
 
     # re-crawl hook: forget one fetched URL → the filter passes it again
     victim = eng.full_schedule().filter("fetched").orderBy("iteration", "seq").limit(1).collect()[0]
     probe = spark.createDataFrame(
         [(victim.url_hash, victim.url_canon)], "url_hash long, url_canon string"
     )
-    assert eng._cuckoo.filter_unseen(probe).count() == 0  # currently seen
+    assert eng.seen.probe(probe).count() == 0  # currently seen
     assert eng.mark_unseen([victim.url_hash]) == 1
-    assert eng._cuckoo.filter_unseen(probe).count() == 1  # re-admitted
+    assert eng.seen.probe(probe).count() == 1  # re-admitted
     # resume continues from checkpoint shards that still include it
     with pytest.raises(ValueError):
         CrawlEngine(
@@ -136,24 +137,31 @@ def test_engine_cuckoo_matches_mirror(spark, tmp_path):
         ).mark_unseen([1])
 
 
-def test_zero_shard_checkpoint_roundtrip(tmp_path):
+@pytest.mark.parametrize("filter_cls", [CuckooShards, BloomShards])
+def test_zero_shard_checkpoint_roundtrip(tmp_path, filter_cls):
     """An iteration where no URL was marked seen writes a zero-shard
     table; resume must restore an empty filter, not crash (ADVICE r2)."""
-    empty = CuckooShards.sized(capacity=1000, n_shards=8)
+    empty = filter_cls.sized(capacity=1000, n_shards=8)
     p = str(tmp_path / "ck")
     empty.write(p)
-    back = CuckooShards.read(p)
-    assert back.n_shards == empty.n_shards
-    assert back.n_buckets == empty.n_buckets
-    assert back.shards == {}
+    back = filter_cls.read(p)
+    assert vars(back).keys() == vars(empty).keys()
+    for name, value in vars(empty).items():
+        if name != "_probe_bc":
+            assert getattr(back, name) == value, name
     # and it is usable: inserts + probes work after the round-trip
     h = np.arange(100, dtype=np.int64) * 7919 + 13
     back.add_hashes(h)
     back.write(p + "2")
-    again = CuckooShards.read(p + "2")
-    for x in h:
-        sid = int(x % again.n_shards)
-        assert again.shards[sid].contains(np.array([x], np.int64))[0]
+    again = filter_cls.read(p + "2")
+    if filter_cls is CuckooShards:
+        for x in h:
+            assert again.shards[int(x % again.n_shards)].contains(np.array([x], np.int64))[0]
+    else:
+        for x in h:
+            sid = int(x % again.n_shards)
+            assert bloom_probe_bytes(again.blobs[sid].tobytes(), np.array([x], np.int64),
+                                     again.n_bits, again.n_hashes)[0]
 
 
 def test_cuckoo_delete_recrawl_respects_politeness(spark, tmp_path):

@@ -10,6 +10,8 @@ Checks, per the north rule:
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 
 import pytest
@@ -23,6 +25,8 @@ from pubcrawler_spark.fixtures import (
     pages_spark_df,
     robots_spark_df,
 )
+from pubcrawler_spark.operators import seen as seen_mod
+from pubcrawler_spark.operators.cuckoo import CuckooShards
 from pubcrawler_spark.plans.frontier import CrawlEngine
 
 N_PAGES = 400
@@ -146,57 +150,38 @@ def test_engine_matches_mirror_exact(spark, fixture, mirror_result, tmp_path):
     assert hit_cap > 0, "cap should actually bind for some delayed host"
 
 
-def test_engine_matches_mirror_bloom(spark, fixture, mirror_result, tmp_path):
-    # bloom mode must produce the same result here: FPs are possible in
-    # principle but the fixture is small vs the filter size, and the
-    # property test in test_seen.py guarantees no false negatives.
-    engine = _run_engine(spark, fixture, tmp_path / "ckb", seen_mode="bloom")
+@pytest.mark.parametrize(
+    "case", ["bloom", "bloom_table", "bloom_distributed_delta", "cuckoo"]
+)
+def test_engine_matches_mirror_seen(spark, fixture, mirror_result, tmp_path, monkeypatch, case):
+    """Every filter SeenSet gives the exact schedule, seen set and text:
+    FPs are possible in principle but the fixture is small vs the filter
+    size, and the property tests guarantee no false negatives. The
+    table placement (shard-join probe, distributed OR-merge) and the
+    driver filter past the delta-size gate never pull url hashes to the
+    driver: the pyarrow column reader is poisoned for the whole run."""
+    if case in ("bloom_table", "bloom_distributed_delta"):
+        def _boom(*a, **k):
+            raise AssertionError("driver materialized url hashes")
+
+        monkeypatch.setattr(seen_mod, "read_col", _boom)
+        monkeypatch.setattr(seen_mod, "DRIVER_DELTA_ROWS", 0)
+    if case == "bloom_table":
+        monkeypatch.setattr(seen_mod, "DRIVER_FILTER_BYTES", 0)
+    mode = "cuckoo" if case == "cuckoo" else "bloom"
+    engine = _run_engine(spark, fixture, tmp_path / "ck", seen_mode=mode)
+    want = {"bloom_table": seen_mod.BloomTable, "cuckoo": CuckooShards}
+    assert type(engine.seen) is want.get(case, seen_mod.BloomShards)
     _assert_matches_mirror(engine, mirror_result, fixture)
-
-
-def test_engine_matches_mirror_bloom_table(spark, fixture, mirror_result, tmp_path, monkeypatch):
-    """bloom_impl='table' (shard-join probe + distributed OR-merge
-    update) matches the mirror AND never pulls url hashes to the driver:
-    the pyarrow column reader is poisoned for the whole run."""
-    from pubcrawler_spark.plans import frontier as frontier_mod
-
-    def _boom(*a, **k):
-        raise AssertionError("driver materialized url hashes in table mode")
-
-    monkeypatch.setattr(frontier_mod, "_read_col", _boom)
-    engine = _run_engine(
-        spark, fixture, tmp_path / "ckt", seen_mode="bloom", bloom_impl="table"
-    )
-    _assert_matches_mirror(engine, mirror_result, fixture)
-    # the committed shard table is loadable by BOTH impls (same layout)
-    import os
     k = engine.committed_iterations()[-1]
     shard_dir = os.path.join(engine._iter_dir(k), "seen_shards")
     assert spark.read.parquet(shard_dir).count() > 0
 
 
-def test_bloom_table_resume(spark, fixture, mirror_result, tmp_path):
-    engine = _run_engine(
-        spark, fixture, tmp_path / "cktr", seen_mode="bloom", bloom_impl="table",
-        resume_at=2,
-    )
-    _assert_matches_mirror(engine, mirror_result, fixture)
-
-
-def test_bloom_driver_distributed_delta(spark, fixture, mirror_result, tmp_path, monkeypatch):
-    """Driver impl past the delta-size gate (forced to 0): deltas are
-    built distributed and OR-merged as blob rows — same schedule, and
-    the raw-hash pull path is never taken."""
-    from pubcrawler_spark.plans import frontier as frontier_mod
-
-    def _boom(*a, **k):
-        raise AssertionError("driver pulled raw hashes past the delta gate")
-
-    monkeypatch.setattr(frontier_mod, "_read_col", _boom)
-    engine = _run_engine(
-        spark, fixture, tmp_path / "ckg", seen_mode="bloom",
-        bloom_delta_driver_limit=0,
-    )
+def test_bloom_table_resume(spark, fixture, mirror_result, tmp_path, monkeypatch):
+    monkeypatch.setattr(seen_mod, "DRIVER_FILTER_BYTES", 0)
+    engine = _run_engine(spark, fixture, tmp_path / "cktr", seen_mode="bloom", resume_at=2)
+    assert isinstance(engine.seen, seen_mod.BloomTable)
     _assert_matches_mirror(engine, mirror_result, fixture)
 
 
@@ -275,7 +260,6 @@ def test_lite_mode_matches_detailed(spark, fixture, mirror_result, tmp_path):
     schedule, parsed text, seen set, and the manifest counters must be
     identical to detailed mode (both run the pinned-schedule plan)."""
     import glob
-    import json
 
     lite = _run_engine(
         spark, fixture, tmp_path / "ckl", seen_mode="bloom", detailed_metrics=False
@@ -342,8 +326,6 @@ def test_loop_aqe_scoping_and_env_hook(spark, fixture, tmp_path, monkeypatch):
 def stepped_bloom(spark, fixture, tmp_path_factory):
     """A bloom-filter engine resumed one iteration at a time, with the
     number of driver-side broadcast files after each iteration."""
-    import os
-
     engine = CrawlEngine(
         spark,
         pages_spark_df(spark, fixture),
@@ -385,3 +367,149 @@ def test_readback_schemas_match_inferred(spark, stepped_bloom, fixture, tmp_path
         for name in engine._schemas:
             inferred = spark.read.parquet(os.path.join(engine._iter_dir(k), name)).schema
             assert engine._read(k, name).schema == inferred, name
+
+
+# -- crash points ---------------------------------------------------------------
+# The 60-page corpus of test_fetch_retry_semantics, crashed part-way
+# through iteration CRASH_K at each seen-set step, then resumed both by
+# the engine that crashed (its dirty marker must force a restore) and
+# by a fresh engine; either way the run must equal an uninterrupted one.
+
+CRASH_MAX, CRASH_K = 2, 1
+SEEN_CASES = ("exact", "bloom", "bloom_table", "cuckoo")
+
+
+class _Fault(RuntimeError):
+    pass
+
+
+@pytest.fixture(scope="module")
+def small():
+    return generate_pages(60)
+
+
+def _small_engine(spark, fx, ck, case):
+    return CrawlEngine(
+        spark, pages_spark_df(spark, fx), robots_spark_df(spark, fx), fx.seeds,
+        checkpoint_dir=str(ck), year=YEAR, host_budget=BUDGET,
+        iteration_window_ms=WINDOW_MS, detailed_metrics=False,
+        seen_mode="bloom" if case == "bloom_table" else case,
+    )
+
+
+def _crawl_state(engine):
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    return rows(engine.full_schedule()), rows(engine.full_parsed()), rows(engine.final_seen())
+
+
+@pytest.fixture(scope="module")
+def small_reference(spark, small, tmp_path_factory):
+    engine = _small_engine(spark, small, tmp_path_factory.mktemp("ck_ref"), "exact")
+    engine.run(max_iterations=CRASH_MAX)
+    return _crawl_state(engine)
+
+
+@pytest.fixture(scope="module")
+def small_seeded(spark, small, tmp_path_factory):
+    """Per seen-set case, a checkpoint holding iteration 0 only."""
+    out = {}
+    for case in SEEN_CASES:
+        with pytest.MonkeyPatch.context() as m:
+            if case == "bloom_table":
+                m.setattr(seen_mod, "DRIVER_FILTER_BYTES", 0)
+            out[case] = tmp_path_factory.mktemp(f"ck_seed_{case}")
+            _small_engine(spark, small, out[case], case).run(max_iterations=1)
+    return out
+
+
+def _raise_in(fn, when):
+    def wrapper(*a, **k):
+        out = fn(*a, **k)
+        if when(*a):
+            raise _Fault("injected")
+        return out
+
+    return wrapper
+
+
+@pytest.mark.parametrize("point", ["filter_update", "shard_write", "rename"])
+@pytest.mark.parametrize("case", SEEN_CASES)
+def test_crash_point_resumes_equal(
+    spark, small, small_reference, small_seeded, tmp_path, monkeypatch, case, point
+):
+    if case == "bloom_table":
+        monkeypatch.setattr(seen_mod, "DRIVER_FILTER_BYTES", 0)
+    crashed, copy = tmp_path / "a", tmp_path / "b"
+    shutil.copytree(small_seeded[case], crashed)
+    engine = _small_engine(spark, small, crashed, case)
+    in_k = f"iter={CRASH_K}.tmp"
+    with monkeypatch.context() as m:
+        if point == "filter_update":
+            m.setattr(engine.seen, "add", _raise_in(engine.seen.add, lambda d, n: in_k in d))
+        elif point == "shard_write":
+            m.setattr(engine.seen, "write", _raise_in(engine.seen.write, lambda d: in_k in d))
+        else:
+            real = os.rename
+
+            def _rename(src, dst):
+                if str(dst).endswith(f"iter={CRASH_K}"):
+                    raise _Fault("injected")
+                return real(src, dst)
+
+            m.setattr(os, "rename", _rename)
+        with pytest.raises(_Fault):
+            engine.run(max_iterations=CRASH_MAX, resume=True)
+    # the frontier write is joined on the way out: no job of the failed
+    # iteration outlives it, and the tmp dir is quiescent for the copy
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert os.path.isdir(crashed / in_k)
+    shutil.copytree(crashed, copy)
+
+    engine.run(max_iterations=CRASH_MAX, resume=True)
+    fresh = _small_engine(spark, small, copy, case)
+    fresh.run(max_iterations=CRASH_MAX, resume=True)
+    for eng, ck in ((engine, crashed), (fresh, copy)):
+        assert eng.committed_iterations() == list(range(CRASH_MAX))
+        assert not [n for n in os.listdir(ck) if n.endswith(".tmp")]
+        assert _crawl_state(eng) == small_reference
+
+
+def test_resume_refuses_old_checkpoint(spark, small, small_seeded, tmp_path):
+    """A manifest without format_version (an older engine's layout) is
+    refused on resume, naming the iteration directory."""
+    ck = tmp_path / "old"
+    shutil.copytree(small_seeded["exact"], ck)
+    manifest = ck / "iter=0" / "_manifest.json"
+    doc = json.loads(manifest.read_text())
+    del doc["format_version"]
+    manifest.write_text(json.dumps(doc))
+    with pytest.raises(ValueError, match="format_version") as err:
+        _small_engine(spark, small, ck, "exact").run(max_iterations=2, resume=True)
+    assert str(ck / "iter=0") in str(err.value)
+
+
+def test_bloom_over_capacity_refuses_commit(spark, small, tmp_path, monkeypatch):
+    """A bloom filter whose estimated FPP passes its target raises
+    before the commit rename; the previous commit still resumes."""
+    # one small shard: iteration 0 (the seeds) fits, iteration 1 does not
+    monkeypatch.setattr(seen_mod, "N_SHARDS", 1)
+    monkeypatch.setattr(seen_mod, "_bloom_params", lambda n, fpp: (128, 4))
+    ck = tmp_path / "ck"
+    engine = _small_engine(spark, small, ck, "bloom")
+    engine.run(max_iterations=1)
+    assert json.loads((ck / "iter=0" / "_manifest.json").read_text())[
+        "counts"]["seen_set"]["est_fpp"] <= seen_mod.FPP_TARGET
+    with pytest.raises(RuntimeError, match="expected_urls"):
+        engine.run(max_iterations=2, resume=True)
+    assert engine.committed_iterations() == [0]
+    # a fresh engine resumes iteration 0's filter; with the target
+    # lifted it commits the iteration the capacity check refused
+    monkeypatch.setattr(seen_mod, "FPP_TARGET", 1.0)
+    fresh = _small_engine(spark, small, ck, "bloom")
+    fresh.run(max_iterations=2, resume=True)
+    assert fresh.committed_iterations() == [0, 1]
+    counts = json.loads((ck / "iter=1" / "_manifest.json").read_text())["counts"]
+    assert counts["seen_set"]["items"] == counts["seen_total"] > 4
+    assert counts["seen_set"]["est_fpp"] > 0.01
