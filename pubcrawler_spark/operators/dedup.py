@@ -598,7 +598,7 @@ CC_LAST_ROUNDS: int = 0
 # past this many drop-ids the anti-join side stops being broadcast:
 # at a realistic 100 TB dup rate the drop-set is billions of ids, far
 # past driver-serialized broadcast territory. Same gate shape as the
-# fetch join's ``fetch_broadcast_limit`` (plans/frontier.py:479).
+# fetch join's ``FETCH_BROADCAST_ROWS`` (plans/frontier.py).
 DROPSET_BROADCAST_LIMIT = 4_000_000
 
 

@@ -170,7 +170,7 @@ def tag_robots(
     counts its cached rules dim once at init and flips this off past
     ``HOST_SIDE_BROADCAST_LIMIT`` hosts — at real-web cardinality
     (~10^8 robots hosts) the dim stays a distributed shuffle join,
-    same gate pattern as the fetch join's ``fetch_broadcast_limit``),
+    same gate pattern as the fetch join's ``FETCH_BROADCAST_ROWS``),
     then:
 
     - fast path (``advanced=False``, correct while no host has Allow or
@@ -213,20 +213,6 @@ def tag_robots(
     return joined.withColumn("robots_ok", ok).drop("__path", *drop_cols)
 
 
-def split_robots(
-    frontier: DataFrame,
-    robots_rules: DataFrame,
-    advanced: bool = False,
-    small_dim: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """(allowed, disallowed) — see :func:`tag_robots`."""
-    tagged = tag_robots(frontier, robots_rules, advanced, small_dim=small_dim)
-    return (
-        tagged.filter(F.col("robots_ok")).drop("robots_ok"),
-        tagged.filter(~F.col("robots_ok")).drop("robots_ok"),
-    )
-
-
 def host_budgets_from_robots(
     robots_rules: DataFrame, host_budget: int, iteration_window_ms: int
 ) -> DataFrame:
@@ -250,8 +236,16 @@ def host_budgets_from_robots(
 # joins go distributed: distinct hosts are bounded above by candidate
 # rows, and at real-web host cardinality (~10^8) a per-host broadcast
 # is a multi-GB driver-serialized relation. Same gate shape as the
-# fetch join's ``fetch_broadcast_limit`` (plans/frontier.py:479).
+# fetch join's ``FETCH_BROADCAST_ROWS`` (plans/frontier.py).
 HOST_SIDE_BROADCAST_LIMIT = 4_000_000
+
+# rows per salted pass-1 window partition: a Zipf-hot host's window
+# would otherwise sort all its candidates in one task
+SALT_ROWS = 50_000
+
+# past this many candidate rows the global rank's single sort task
+# becomes the bottleneck, so the rank goes range-partitioned instead
+SERIAL_RANK_ROWS = 2_000_000
 
 
 def _picked_rows(
@@ -261,8 +255,8 @@ def _picked_rows(
     host_budgets: DataFrame | None,
     size_hint: int | None = None,
 ) -> DataFrame:
-    """Per-host top-k core shared by :func:`pick_schedule` and
-    :func:`schedule_ranks`: salted pass-1 bound + exact pass-2 budget.
+    """Per-host top-k core of :func:`schedule_ranks`: salted pass-1
+    bound + exact pass-2 budget.
 
     ``size_hint`` (candidate row count, free from parquet footers in
     the frontier loop) gates the two per-host broadcasts: below
@@ -318,121 +312,34 @@ def _picked_rows(
     )
 
 
-def pick_schedule(
-    allowed: DataFrame,
-    host_budget: int,
-    iteration: int,
-    salt_rows: int = 50_000,
-    host_budgets: DataFrame | None = None,
-    size_hint: int | None = None,
-    serial_limit: int = 2_000_000,
-) -> DataFrame:
-    """Per-host top-k (k = ``host_budget``, reduced per host by
-    ``host_budgets.max_per_iter`` where present) then a deterministic
-    global sequence.
-
-    Returns fetch_schedule(iteration, seq, url, url_canon, url_hash,
-    host, priority, depth, disc_seq).
-    """
-    picked = _picked_rows(allowed, host_budget, salt_rows, host_budgets, size_hint)
-    # global deterministic sequence — WITHOUT a single-partition window
-    # (Window.orderBy() with no partitionBy funnels the whole schedule
-    # through one task, and every downstream stage — fetch join, parse —
-    # inherits that one partition; observed as single-threaded parse).
-    # Discovery seq is preserved as disc_seq (child-link ordering key).
-    # Pin (cache) before the rank join-back: global_sequence consumes
-    # `picked` on BOTH join sides, and unpinned the whole salted-window
-    # stack re-executes per side (q26's plan showed the stack twice over
-    # the full frontier). The pinned rows are the per-iteration fetch
-    # schedule itself — exactly what the crawl loop materializes to
-    # parquet at this point (schedule_ranks path), so the pin is the
-    # in-memory analog, bounded by hosts × budget rows. cache() rather
-    # than localCheckpoint so the window plan (incl. the
-    # WindowGroupLimit rank pushdown) stays visible/assertable in
-    # explain output.
-    picked = picked.withColumnRenamed("seq", "disc_seq").cache()
-    return global_sequence(
-        picked,
-        order_col_names=["priority", "depth", "disc_seq", "url_hash"],
-        descending={"priority"},
-        key_col="url_canon",
-        size_hint=size_hint,
-        serial_limit=serial_limit,
-    ).withColumn("iteration", F.lit(iteration))
-
-
 def schedule_ranks(
     allowed: DataFrame,
     host_budget: int,
-    salt_rows: int = 50_000,
+    salt_rows: int = SALT_ROWS,
     host_budgets: DataFrame | None = None,
     size_hint: int | None = None,
-    serial_limit: int = 2_000_000,
-    out_col: str = "sched_seq",
+    serial_limit: int = SERIAL_RANK_ROWS,
 ) -> DataFrame:
-    """SLIM schedule: (url_canon, ``out_col``) for exactly the rows
-    :func:`pick_schedule` would pick, with the identical global rank.
+    """The fetch schedule as a slim ``(url_canon, sched_seq)`` table:
+    per-host top-k (k = ``host_budget``, reduced per host by
+    ``host_budgets.max_per_iter`` where present), then a dense 0-based
+    global rank over ``(priority DESC, depth, seq, url_hash)``.
 
-    This is the fused-iteration form: the engine LEFT-joins these ranks
-    onto the full candidate table inside the candidates write, so the
-    fetch schedule and the budget-deferred leftovers both become pure
-    column-pruned projections of ONE materialized table — no separate
-    schedule job, no leftover anti-join. The slim side is a few bytes
-    per scheduled URL, so the join-back broadcasts at fetch-schedule
-    sizes and shuffles cleanly past them.
+    Callers join the ranks back on ``url_canon`` onto the table
+    ``allowed`` was read from: the crawl engine onto its materialized
+    candidates (and an anti-join against them gives the budget-deferred
+    leftovers), q26 onto its pinned frontier. The slim side is a few
+    bytes per scheduled URL, so the join-back broadcasts at
+    fetch-schedule sizes and shuffles past them.
     """
-    picked = _picked_rows(
-        allowed, host_budget, salt_rows, host_budgets, size_hint
-    ).withColumnRenamed("seq", "disc_seq")
     return global_ranks(
-        picked,
-        order_col_names=["priority", "depth", "disc_seq", "url_hash"],
+        _picked_rows(allowed, host_budget, salt_rows, host_budgets, size_hint),
+        order_col_names=["priority", "depth", "seq", "url_hash"],
         descending={"priority"},
         key_col="url_canon",
-        out_col=out_col,
+        out_col="sched_seq",
         size_hint=size_hint,
         serial_limit=serial_limit,
-    )
-
-
-def global_sequence(
-    df: DataFrame,
-    order_col_names: list[str],
-    descending: set[str],
-    key_col: str,
-    out_col: str = "seq",
-    size_hint: int | None = None,
-    serial_limit: int = 2_000_000,
-) -> DataFrame:
-    """Deterministic dense 0-based global rank over a total order.
-
-    Two physical strategies, gated by ``size_hint`` (an upper bound the
-    caller knows for free, e.g. the candidate count from parquet
-    footers):
-
-    - **slim single-sort** (default / ≤ ``serial_limit``): a SLIM
-      (key + order columns) projection is ranked through one
-      single-partition window, then joined back distributed. Only the
-      ~40-byte slim rows serialize through the one sort task; every
-      downstream stage keeps full parallelism via the join.
-    - **pinned two-phase range rank** (> ``serial_limit``): see
-      :func:`_global_sequence_ranged` — no serial stage at all; this is
-      the 10^8-row path.
-
-    Both produce the IDENTICAL (key → rank) mapping: the rank is a
-    property of the total order, not of the physical plan (the range
-    boundaries only decide which task computes which slice).
-
-    ``order_col_names`` must form a total order and ``key_col`` must be
-    unique per row.
-    """
-    if out_col in df.columns:
-        raise ValueError(
-            f"global_sequence: output column {out_col!r} already exists — rename it first"
-        )
-    return df.join(
-        global_ranks(df, order_col_names, descending, key_col, out_col, size_hint, serial_limit),
-        key_col,
     )
 
 
@@ -443,12 +350,31 @@ def global_ranks(
     key_col: str,
     out_col: str = "seq",
     size_hint: int | None = None,
-    serial_limit: int = 2_000_000,
+    serial_limit: int = SERIAL_RANK_ROWS,
 ) -> DataFrame:
-    """The slim ``(key_col, out_col)`` rank mapping behind
-    :func:`global_sequence` — callers that join the ranks onto a wider
-    table themselves (the engine's fused candidates write) use this
-    directly."""
+    """Deterministic dense 0-based global rank over a total order, as a
+    slim ``(key_col, out_col)`` mapping the caller joins back.
+
+    Two physical strategies, gated by ``size_hint`` (an upper bound the
+    caller knows for free, e.g. the candidate count from parquet
+    footers):
+
+    - **slim single-sort** (default / ≤ ``serial_limit``): a SLIM
+      (key + order columns) projection is ranked through one
+      single-partition window. Only the ~40-byte slim rows serialize
+      through the one sort task; the caller's join-back keeps every
+      downstream stage at full parallelism.
+    - **pinned two-phase range rank** (> ``serial_limit``): see
+      :func:`_global_ranks_ranged` — no serial stage at all; this is
+      the 10^8-row path.
+
+    Both produce the IDENTICAL (key → rank) mapping: the rank is a
+    property of the total order, not of the physical plan (the range
+    boundaries only decide which task computes which slice).
+
+    ``order_col_names`` must form a total order and ``key_col`` must be
+    unique per row.
+    """
     order = [
         F.col(c).desc() if c in descending else F.col(c).asc()
         for c in order_col_names

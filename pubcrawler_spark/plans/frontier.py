@@ -37,7 +37,7 @@ Throughput engineering (north-star metric is URLs/sec):
   ``localCheckpoint`` (the r3 design): the write is ~50× smaller, the
   slim table broadcast-gates every consumption (fetch keys, the column
   join-back, the leftover anti-join — all broadcast probes under
-  ``fetch_broadcast_limit``, distributed joins past it), and it is
+  ``FETCH_BROADCAST_ROWS``, distributed joins past it), and it is
   committed checkpoint state, so resume can re-derive what iteration K
   scheduled without recomputing windows.
 - The fetch join broadcasts the (budget-bounded) schedule keys against
@@ -79,6 +79,15 @@ from pubcrawler_spark.operators.seen import count_parquet, parquet_files
 # it (older engines rewrote the whole exact seen table per iteration and
 # kept no geometry in empty shard tables)
 FORMAT_VERSION = 2
+
+# past this many scheduled rows the fetch join and the leftover
+# anti-join shuffle the schedule keys instead of broadcasting them: the
+# driver builds every broadcast relation alone
+FETCH_BROADCAST_ROWS = 4_000_000
+
+# retries a fetch miss gets (X3); refmirror.mirror_crawl's default, which
+# the parity tests hold the engine to
+MAX_RETRIES = 2
 
 
 def _col_null_count(path: str, col: str, invert: bool = False) -> int:
@@ -166,13 +175,9 @@ class CrawlEngine:
         year: int | str,
         host_budget: int = 10,
         seen_mode: str = "exact",
-        fetch_broadcast_limit: int = 4_000_000,
-        seq_serial_limit: int = 2_000_000,
-        salt_rows: int = 50_000,
         detailed_metrics: bool = True,
         expected_urls: int = 2_000_000,
         iteration_window_ms: int = 60_000,
-        max_retries: int = 2,
     ) -> None:
         """``seen_mode``: ``"exact"`` (anti-join), ``"bloom"`` (no false
         negatives, no deletes), or ``"cuckoo"`` (same probe surface plus
@@ -191,17 +196,17 @@ class CrawlEngine:
         self.year = year
         self.host_budget = host_budget
         self.seen_mode = seen_mode
-        self.fetch_broadcast_limit = fetch_broadcast_limit
-        self.seq_serial_limit = seq_serial_limit
+        # the schedule constants as of construction; the perfbench
+        # replay re-runs schedule_ranks with these two
+        self.salt_rows = sched.SALT_ROWS
+        self.seq_serial_limit = sched.SERIAL_RANK_ROWS
         self.seen = seen_mod.seen_set(spark, seen_mode, expected_urls)
         # the committed iteration the in-memory seen set reflects; lets
         # resume keep live state — including mark_unseen deletes —
         # instead of restoring it from the checkpoint
         self._seen_k: int | None = None
         self._seen_total = 0  # cumulative delta-ledger size
-        self.salt_rows = salt_rows
         self.detailed_metrics = detailed_metrics
-        self.max_retries = max_retries
         self.expected_urls = expected_urls
         self.ckpt = checkpoint_dir
         self.seeds = seeds
@@ -387,7 +392,7 @@ class CrawlEngine:
             shutil.rmtree(tmp)
             return None
         sched_rb = _rb("sched")
-        small_sched = n_sched <= self.fetch_broadcast_limit
+        small_sched = n_sched <= FETCH_BROADCAST_ROWS
         ranks_join = F.broadcast(sched_rb) if small_sched else sched_rb
         schedule = cand_rb.join(ranks_join, "url_canon").select(
             F.lit(k).alias("iteration"),
@@ -399,7 +404,7 @@ class CrawlEngine:
 
         # JOB 3: fetch join → parse, one pass. Fetch-join strategy,
         # size-gated on the EXACT schedule size (known from the slim
-        # table's footers): under fetch_broadcast_limit, broadcast ONLY
+        # table's footers): under FETCH_BROADCAST_ROWS, broadcast ONLY
         # the schedule's url_canon keys as a semi-join filter into the
         # cached corpus (keys are a few bytes/URL — a full-schedule
         # broadcast builds a large hash relation serially on the
@@ -440,7 +445,7 @@ class CrawlEngine:
         n_parsed = n_sched - _col_null_count(pl_path, "id")
         job_ms["pl_counters"] = int((time.monotonic() - t0) * 1000)
 
-        # JOB 3: next frontier = budget-deferred leftovers ∪ new links
+        # JOB 4: next frontier = budget-deferred leftovers ∪ new links
         # ∪ fetch-miss retries (X3: decayed priority, bounded attempts).
         # Child discovery seq = parent GLOBAL schedule seq × 100k + link
         # position: bounded (global seq resets each iteration, unlike the
@@ -469,7 +474,7 @@ class CrawlEngine:
             "url_canon", "left_anti",
         ).select(*_frontier_cols())
         retries = (
-            pl_rb.filter(~F.col("fetched") & (F.col("attempts") < self.max_retries))
+            pl_rb.filter(~F.col("fetched") & (F.col("attempts") < MAX_RETRIES))
             .select(
                 "url", "url_canon", "url_hash", "host",
                 (F.col("priority") * 0.25).alias("priority"),
@@ -504,7 +509,7 @@ class CrawlEngine:
             n_disallowed = _col_sum_false(cand_path, "robots_ok")
             job_ms["cand_counters"] += int((time.monotonic() - t0) * 1000)
 
-            # JOB 4: seen delta = successfully fetched ∪ robots-disallowed
+            # JOB 5: seen delta = successfully fetched ∪ robots-disallowed
             # (fetch misses stay un-seen so retries pass the seen filter;
             # bloom shards have no deletes, so this ordering is
             # load-bearing). Only the delta is written — the seen table is
@@ -587,7 +592,7 @@ class CrawlEngine:
         }
 
         # metrics: lite mode writes the counters with pyarrow (no Spark
-        # job); detailed mode adds per-partition lineage (JOB 5)
+        # job); detailed mode adds per-partition lineage (JOB 6)
         if self.detailed_metrics:
             metrics = (
                 pl_rb.groupBy(F.spark_partition_id().alias("partition_id"))

@@ -654,13 +654,16 @@ def q23(spark, sf_dir):
 
 
 @q("q32_embedding_neardup_lsh")  # hyperplane signatures — rows-only (scale path)
-def q32(spark, sf_dir):
+def q32(spark, sf_dir, pin=True):
     """Embedding near-dup via hyperplane-LSH candidates (the 10^8+-vector
     plan): banded sign-bit buckets → equi-join on (band, bucket) → exact
     cosine verify. Pytest asserts its pairs ⊇ the exact q23 pairs on the
-    fixture (recall ≈ 1 − 1.6e-4 per pair at τ=0.45 with these params)."""
+    fixture (recall ≈ 1 − 1.6e-4 per pair at τ=0.45 with these params).
+    ``pin=False`` drops the scoring barrier so plan tests can see the
+    candidate join (see ``dedup.embedding_neardup_pairs``)."""
     return dedup.embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.45, mode="lsh", n_bits=32, bands=16
+        _t(spark, sf_dir, "embeddings"),
+        threshold=0.45, mode="lsh", n_bits=32, bands=16, pin=pin,
     )
 
 
@@ -1074,12 +1077,14 @@ def q31(spark, sf_dir):
 def q26(spark, sf_dir):
     """W3/W4 politeness scheduler under a SQL oracle: per-host top-5 by
     (priority desc, depth, seq) + deterministic global sequence. The
-    Spark side runs the REAL engine path (canonicalize UDF + salted
-    two-pass window). The canonicalized candidates are PINNED
-    (localCheckpoint) before the window stack, exactly as the engine
-    materializes its candidates table — unpinned, the demo plan
-    re-evaluates the canonicalize UDF on both sides of the salted
-    windows' rank join (the engine path never does)."""
+    Spark side is the crawl engine's own composition: canonicalize UDF,
+    ``schedule.schedule_ranks`` (salted two-pass window + global rank),
+    then the slim ranks joined back onto the candidates on
+    ``url_canon``. The canonicalized candidates are PINNED
+    (localCheckpoint) first, as the engine materializes its candidates
+    table — unpinned, the canonicalize UDF would run once for the window
+    stack and again for the join-back. That checkpoint is the query's
+    only persisted RDD."""
     from pubcrawler_spark.functions.urltools import with_canonical_url
 
     e = _t(spark, sf_dir, "events")
@@ -1094,8 +1099,10 @@ def q26(spark, sf_dir):
             F.col("event_id").alias("seq"),
         )
     ).localCheckpoint(eager=False)
-    out = sched.pick_schedule(frontier, host_budget=5, iteration=0, salt_rows=200)
-    return out.select("seq", "url_canon", "host", "priority").orderBy("seq")
+    ranks = sched.schedule_ranks(frontier, host_budget=5, salt_rows=200)
+    return frontier.join(ranks, "url_canon").select(
+        F.col("sched_seq").alias("seq"), "url_canon", "host", "priority"
+    ).orderBy("seq")
 
 
 @q(

@@ -15,7 +15,7 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrameWriter, functions as F
 
 from pubcrawler_spark import refmirror as rm
 from pubcrawler_spark.fixtures import (
@@ -25,8 +25,10 @@ from pubcrawler_spark.fixtures import (
     pages_spark_df,
     robots_spark_df,
 )
+from pubcrawler_spark.operators import schedule as sched_mod
 from pubcrawler_spark.operators import seen as seen_mod
 from pubcrawler_spark.operators.cuckoo import CuckooShards
+from pubcrawler_spark.plans import frontier as frontier_mod
 from pubcrawler_spark.plans.frontier import CrawlEngine
 
 N_PAGES = 400
@@ -58,19 +60,20 @@ def mirror_result(fixture):
 
 
 def _run_engine(spark, fixture, tmp, seen_mode="exact", resume_at=None, **kw):
-    engine = CrawlEngine(
-        spark,
-        pages_spark_df(spark, fixture),
-        robots_spark_df(spark, fixture),
-        fixture.seeds,
-        checkpoint_dir=str(tmp),
-        year=YEAR,
-        host_budget=BUDGET,
-        seen_mode=seen_mode,
-        salt_rows=40,  # force salting paths to exercise at fixture scale
-        iteration_window_ms=WINDOW_MS,
-        **kw,
-    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(sched_mod, "SALT_ROWS", 40)  # force salting paths at fixture scale
+        engine = CrawlEngine(
+            spark,
+            pages_spark_df(spark, fixture),
+            robots_spark_df(spark, fixture),
+            fixture.seeds,
+            checkpoint_dir=str(tmp),
+            year=YEAR,
+            host_budget=BUDGET,
+            seen_mode=seen_mode,
+            iteration_window_ms=WINDOW_MS,
+            **kw,
+        )
     if resume_at is not None:
         engine.run(max_iterations=resume_at)
         # simulate crash: an in-progress tmp dir is left behind
@@ -185,13 +188,12 @@ def test_bloom_table_resume(spark, fixture, mirror_result, tmp_path, monkeypatch
     _assert_matches_mirror(engine, mirror_result, fixture)
 
 
-def test_fetch_join_non_broadcast_path(spark, fixture, mirror_result, tmp_path):
+def test_fetch_join_non_broadcast_path(spark, fixture, mirror_result, tmp_path, monkeypatch):
     """Size gate forced to 0: the fetch join runs as a distributed
     shuffle semi-join (the past-broadcast scale path) — same schedule,
     same parses."""
-    engine = _run_engine(
-        spark, fixture, tmp_path / "ckf", fetch_broadcast_limit=0
-    )
+    monkeypatch.setattr(frontier_mod, "FETCH_BROADCAST_ROWS", 0)
+    engine = _run_engine(spark, fixture, tmp_path / "ckf")
     _assert_matches_mirror(engine, mirror_result, fixture)
 
 
@@ -235,9 +237,9 @@ def test_fetch_retry_semantics(spark, tmp_path):
     dead = sched.filter("url_canon like '%/dead%'")
     n_dead_urls = dead.select("url_canon").distinct().count()
     assert n_dead_urls > 0, "fixture must contain dead index links"
-    # each dead URL scheduled at most 1 + max_retries (=2) times
+    # each dead URL scheduled at most 1 + MAX_RETRIES times
     per_url = dead.groupBy("url_canon").count().collect()
-    assert all(r["count"] <= 3 for r in per_url)
+    assert all(r["count"] <= 1 + frontier_mod.MAX_RETRIES for r in per_url)
     # at least one got retried (scheduled in >1 iteration)
     assert any(r["count"] >= 2 for r in per_url)
     # dead URLs are never marked fetched, never parsed, never seen
@@ -434,8 +436,13 @@ def _raise_in(fn, when):
     return wrapper
 
 
-@pytest.mark.parametrize("point", ["filter_update", "shard_write", "rename"])
-@pytest.mark.parametrize("case", SEEN_CASES)
+# the frontier write runs on a thread while the driver updates the seen
+# set: a driver-held bloom filter is mid-mutation when the thread fails
+@pytest.mark.parametrize(
+    "case,point",
+    [(c, p) for c in SEEN_CASES for p in ("filter_update", "shard_write", "rename")]
+    + [("exact", "frontier_write"), ("bloom", "frontier_write")],
+)
 def test_crash_point_resumes_equal(
     spark, small, small_reference, small_seeded, tmp_path, monkeypatch, case, point
 ):
@@ -450,6 +457,11 @@ def test_crash_point_resumes_equal(
             m.setattr(engine.seen, "add", _raise_in(engine.seen.add, lambda d, n: in_k in d))
         elif point == "shard_write":
             m.setattr(engine.seen, "write", _raise_in(engine.seen.write, lambda d: in_k in d))
+        elif point == "frontier_write":
+            m.setattr(DataFrameWriter, "parquet", _raise_in(
+                DataFrameWriter.parquet,
+                lambda w, path, *a: str(path).endswith(os.path.join(in_k, "frontier")),
+            ))
         else:
             real = os.rename
 

@@ -16,8 +16,8 @@ from pubcrawler_spark.queries import QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF)
+def _plan(spark, name: str, **kw) -> str:
+    df = QUERIES[name](spark, SF, **kw)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -55,6 +55,17 @@ def test_q26_rank_limit_pushdown(spark):
     assert "BroadcastHashJoin" in p  # host-count dim broadcast
 
 
+def test_q26_persists_only_its_candidates(spark):
+    """Collecting q26 leaves exactly one new persisted RDD: the pinned
+    candidates. The schedule itself is joined back from slim ranks, not
+    cached."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
+    df = QUERIES["q26_politeness_schedule"](spark, SF)
+    df.collect()
+    assert len(set(rdds().keys()) - before) == 1
+
+
 def test_q03_fact_broadcast_dims(spark):
     p = _plan(spark, "q03_region_revenue")
     # all four dims broadcast; the fact table shuffles at most for the agg
@@ -81,17 +92,7 @@ def _q32_unpinned_plan(spark) -> str:
     candidate join's condition), which hides the join topology behind a
     Scan ExistingRDD in explain. ``pin=False`` exposes the identical
     candidate stage for the shape assertions below."""
-    from pubcrawler_spark.operators import dedup
-    from pubcrawler_spark.queries import _t
-
-    df = dedup.embedding_neardup_pairs(
-        _t(spark, SF, "embeddings"),
-        threshold=0.45, mode="lsh", n_bits=32, bands=16, pin=False,
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return _plan(spark, "q32_embedding_neardup_lsh", pin=False)
 
 
 def test_q32_lsh_neardup_is_equi_join(spark):

@@ -1,4 +1,4 @@
-"""Scale-shape tests for the scheduler: global_sequence determinism and
+"""Scale-shape tests for the scheduler: global rank (W4) determinism and
 salting budget enforcement on a larger synthetic frontier."""
 
 from __future__ import annotations
@@ -25,10 +25,25 @@ def _frontier(spark, n=120_000, hosts=50):
     )
 
 
+ORDER = dict(
+    order_col_names=["priority", "depth", "disc_seq", "url_hash"],
+    descending={"priority"},
+    key_col="url_canon",
+)
+
+
+def _sequenced(df, **kw):
+    """The frontier rows with their global rank joined back as ``seq``."""
+    return df.join(sched.global_ranks(df, **ORDER, **kw), "url_canon")
+
+
+def _ranks(df, **kw):
+    return {tuple(r) for r in sched.schedule_ranks(df, **kw).collect()}
+
+
 def test_global_sequence_dense_unique_deterministic(spark):
     df = _frontier(spark, 120_000).withColumnRenamed("seq", "disc_seq")
-    args = (["priority", "depth", "disc_seq", "url_hash"], {"priority"}, "url_canon")
-    a = sched.global_sequence(df, *args)
+    a = _sequenced(df)
     n = df.count()
     stats = a.agg(
         F.count("*").alias("n"),
@@ -39,11 +54,10 @@ def test_global_sequence_dense_unique_deterministic(spark):
     # dense 0..n-1, no rows lost, no duplicates
     assert (stats["n"], stats["d"], stats["mn"], stats["mx"]) == (n, n, 0, n - 1)
     # deterministic across independent computations
-    b = sched.global_sequence(df, *args)
+    b = _sequenced(df)
     assert a.select("seq", "url_canon").exceptAll(b.select("seq", "url_canon")).count() == 0
     # seq order agrees with the declared total order
     top = a.orderBy("seq").limit(1000).collect()
-    keys = [(-r["priority"], r["depth"], r["seq"]) for r in top]
     prios = [r["priority"] for r in top]
     assert prios == sorted(prios, reverse=True)
 
@@ -53,13 +67,8 @@ def test_global_sequence_ranged_equals_serial(spark):
     the IDENTICAL (key → seq) mapping as the slim single-sort, and
     stays dense/deterministic across recomputation."""
     df = _frontier(spark, 150_000).withColumnRenamed("seq", "disc_seq")
-    args = dict(
-        order_col_names=["priority", "depth", "disc_seq", "url_hash"],
-        descending={"priority"},
-        key_col="url_canon",
-    )
-    serial = sched.global_sequence(df, **args)
-    ranged = sched.global_sequence(df, **args, size_hint=150_000, serial_limit=1)
+    serial = _sequenced(df)
+    ranged = _sequenced(df, size_hint=150_000, serial_limit=1)
     assert (
         serial.select("url_canon", "seq")
         .exceptAll(ranged.select("url_canon", "seq"))
@@ -73,25 +82,21 @@ def test_global_sequence_ranged_equals_serial(spark):
     ).collect()[0]
     assert (stats["n"], stats["d"], stats["mn"], stats["mx"]) == (n, n, 0, n - 1)
     # recomputation is stable (pinned intermediate, total order)
-    again = sched.global_sequence(df, **args, size_hint=150_000, serial_limit=1)
+    again = _sequenced(df, size_hint=150_000, serial_limit=1)
     assert ranged.select("url_canon", "seq").exceptAll(again.select("url_canon", "seq")).count() == 0
 
 
-def test_pick_schedule_ranged_path_matches_serial(spark):
-    """pick_schedule with a size_hint past the serial limit (forces the
+def test_schedule_ranks_ranged_path_matches_serial(spark):
+    """schedule_ranks with a size_hint past the serial limit (forces the
     two-phase rank inside the engine path) matches the default plan."""
     df = _frontier(spark, 60_000)
-    base = {(r["url_canon"], r["seq"]) for r in
-            sched.pick_schedule(df, host_budget=50, iteration=0, salt_rows=1_000).collect()}
-    ranged = sched.pick_schedule(df, host_budget=50, iteration=0, salt_rows=1_000,
-                                 size_hint=10_000_000)
-    got = {(r["url_canon"], r["seq"]) for r in ranged.collect()}
-    assert got == base
+    base = _ranks(df, host_budget=50, salt_rows=1_000)
+    assert _ranks(df, host_budget=50, salt_rows=1_000, size_hint=10_000_000) == base
 
 
 def test_salted_budget_exact_at_scale(spark):
     df = _frontier(spark, 60_000)
-    out = sched.pick_schedule(df, host_budget=100, iteration=0, salt_rows=1_000)
+    out = df.join(sched.schedule_ranks(df, host_budget=100, salt_rows=1_000), "url_canon")
     per_host = out.groupBy("host").count().collect()
     assert all(r["count"] <= 100 for r in per_host)
     # the hot host must hit the budget exactly (salting didn't undercount)
@@ -99,8 +104,8 @@ def test_salted_budget_exact_at_scale(spark):
     assert hot == [100]
     # schedule seq dense over the picked set
     n = out.count()
-    assert out.agg(F.countDistinct("seq")).collect()[0][0] == n
-    assert out.agg(F.max("seq")).collect()[0][0] == n - 1
+    assert out.agg(F.countDistinct("sched_seq")).collect()[0][0] == n
+    assert out.agg(F.max("sched_seq")).collect()[0][0] == n - 1
 
 
 def test_host_side_broadcast_gate(spark):
@@ -131,16 +136,7 @@ def test_host_side_broadcast_gate(spark):
 def test_salt_skip_fast_path_matches_salted(spark):
     """r8 salt-skip: when size_hint proves no host can exceed salt_rows
     (total rows <= salt_rows), the single-pass plan must pick the exact
-    same (url_canon, seq) schedule as the salted two-pass plan — and
-    schedule_ranks (the engine's slim form) must agree too."""
+    same (url_canon, sched_seq) schedule as the salted two-pass plan."""
     df = _frontier(spark, 5_000)
-    salted = {(r["url_canon"], r["seq"]) for r in
-              sched.pick_schedule(df, host_budget=20, iteration=0, salt_rows=200).collect()}
-    fast = {(r["url_canon"], r["seq"]) for r in
-            sched.pick_schedule(df, host_budget=20, iteration=0, salt_rows=200_000,
-                                size_hint=5_000).collect()}
-    assert fast == salted
-    slim = {(r["url_canon"], r["sched_seq"]) for r in
-            sched.schedule_ranks(df, host_budget=20, salt_rows=200_000,
-                                 size_hint=5_000).collect()}
-    assert slim == salted
+    salted = _ranks(df, host_budget=20, salt_rows=200)
+    assert _ranks(df, host_budget=20, salt_rows=200_000, size_hint=5_000) == salted
